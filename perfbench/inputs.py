@@ -4,14 +4,19 @@ The schedule is written as GTFS CSV (``schedule/*.txt``) and the delay
 rows of ``sources/demo.records_rows`` as wire-format GTFS-rt
 FeedMessages (``rt/*.pb``), both from this one process.
 
+There is one feed file per recording time, as a poller writes one
+FeedMessage per fetch and ``sources/demo.write_rt_feed_files`` writes
+one file per source feed: the demo's 75 recording times give 75 files
+at any replica count, each holding every replica's updates of that
+time.
+
 The seed varies only the arrangement, never the content the oracle
 sees: the replica name tokens and which replica gets which
-route_variant offset, the split of each recording time's updates over
-two feed files, row order inside files and CSVs, and (for the
-incremental import) the landing order of the files and which updates
-are re-sent.  Every replica's delays are the demo's exactly (no
-jitter), so each per-variant statistic equals the demo oracle's row with
-mapped keys.
+route_variant offset, the feed's file-name prefix, row order inside
+files and CSVs, and (for the incremental import) the landing order of
+the files and which updates are re-sent.  Every replica's delays are
+the demo's exactly (no jitter), so each per-variant statistic equals
+the demo oracle's row with mapped keys.
 """
 
 from __future__ import annotations
@@ -24,8 +29,6 @@ from dataclasses import dataclass, field
 from dystonse_gtfs_data_spark.sources.demo import records_rows, schedule_rows
 from dystonse_gtfs_data_spark.sources.rt import encode_feed_message
 
-#: feed files per recording time; the seed decides which update goes where
-SHARDS = 2
 #: route_variant offset per replica slot, as in sources/demo.scale_fixture
 VARIANT_STRIDE = 1000
 
@@ -173,16 +176,11 @@ def make_inputs(
     for rep in reps:
         for row in records_rows():
             by_time.setdefault(row[8], []).append(_update(rep, row))
-    prefixes = [f"feed{rng.getrandbits(16):04x}" for _ in range(SHARDS)]
+    prefix = f"feed{rng.getrandbits(16):04x}"
     files: list[tuple[str, dt.datetime, list[dict]]] = []
     for tor, ups in sorted(by_time.items()):
         rng.shuffle(ups)
-        shards: list[list[dict]] = [[] for _ in range(SHARDS)]
-        for u in ups:
-            shards[rng.randrange(SHARDS)].append(u)
-        for prefix, shard in zip(prefixes, shards):
-            if shard:
-                files.append((_feed_name(prefix, tor), tor, shard))
+        files.append((_feed_name(prefix, tor), tor, ups))
 
     if resend_share > 0:
         files += _resends(by_time, rng, resend_share)

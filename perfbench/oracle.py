@@ -30,13 +30,13 @@ SOURCE = "test"  # sources/demo.records_rows' source, kept so rows compare as-is
 STAT_COLS = [
     "scope", "route_id", "route_variant", "start_stop_index", "end_stop_index",
     "stop_index", "route_type", "route_section", "time_slot_id", "event_type",
-    "focus_delay", "n_points", "precision_type", "sample_size",
+    "focus_delay", "curve_x", "curve_y", "precision_type", "sample_size",
 ]
 PRED_COLS = [
     "source", "event_type", "stop_id", "stop_sequence", "route_id", "trip_id",
     "trip_start_date", "trip_start_time", "prediction_min_us",
     "prediction_max_us", "precision_type", "origin_type", "sample_size",
-    "n_curve_points",
+    "curve_x", "curve_y",
 ]
 BOARD_COLS = [
     "stop_id", "stop_sequence", "event_type", "trip_id", "trip_start_date",
@@ -60,6 +60,8 @@ RECORD_COLS = [
 
 def _norm(v):
     """One spelling per value across pandas, Arrow and JSON rows."""
+    if isinstance(v, (np.ndarray, list, tuple)):  # a curve's knots
+        return tuple(float(x) for x in v)
     if v is None or v is pd.NaT:
         return None
     if isinstance(v, (np.generic,)):
@@ -92,6 +94,15 @@ def _diff(name: str, actual: list[tuple], expected: list[tuple]) -> list[str]:
     ]
 
 
+def _with_knots(df: pd.DataFrame, col: str) -> pd.DataFrame:
+    """Replace the Curve objects in ``col`` by their knots, as the
+    engine stores them (float32, see demo_oracle_pipeline._store)."""
+    out = df.drop(columns=[col])
+    out["curve_x"] = [tuple(c.xs) for c in df[col]]
+    out["curve_y"] = [tuple(c.ys) for c in df[col]]
+    return out
+
+
 def _map_keys(df: pd.DataFrame, rep: Replica, cols: list[str]) -> pd.DataFrame:
     out = df.copy()
     for c in cols:
@@ -104,10 +115,12 @@ class Oracle:
 
     def __init__(self, inputs: Inputs):
         self.inputs = inputs
-        stats = oracle.expected_gtfs_statistics()
-        self._stats = stats[stats["scope"].isin(["specific", "semi_specific"])]
-        self._preds = oracle.expected_realtime_predictions()
+        stats = oracle.expected_statistics()
+        self._stats = _with_knots(
+            stats[stats["scope"].isin(["specific", "semi_specific"])], "curve"
+        )
         self._pred_rows = oracle._realtime_predictions_full()  # noqa: SLF001
+        self._preds = _with_knots(pd.DataFrame(self._pred_rows), "_curve")
         st = oracle._stop_times_df()  # noqa: SLF001
         self._max_seq = st.groupby("trip_id")["stop_sequence"].max().to_dict()
         self.expected_stats = self._replicated(self._stats_for, STAT_COLS)
@@ -131,7 +144,7 @@ class Oracle:
 
     def check_statistics(self, stats: pd.DataFrame) -> list[str]:
         """``stats``: the statistics table's specific and semi_specific
-        rows, projected to STAT_COLS (curve → n_points)."""
+        rows, projected to STAT_COLS (curve → its x and y knots)."""
         return _diff("statistics", _rows(stats, STAT_COLS), self.expected_stats)
 
     def check_predictions(self, preds: pd.DataFrame) -> list[str]:

@@ -50,14 +50,12 @@ class CpuSample:
     python_s: float  # PySpark daemon and its forked workers
 
 
-def descendants(root: int | None = None) -> list[int]:
-    """Live processes started, directly or not, by ``root`` (default:
-    this process)."""
-    table = _proc_table()
+def _tree(table: dict[int, tuple[int, float, bool]]) -> list[int]:
+    """This process and every live process it started, directly or not."""
     children: dict[int, list[int]] = {}
     for pid, (ppid, _, _) in table.items():
         children.setdefault(ppid, []).append(pid)
-    out, stack = [], list(children.get(root or os.getpid(), []))
+    out, stack = [], [os.getpid()]
     while stack:
         pid = stack.pop()
         out.append(pid)
@@ -65,23 +63,20 @@ def descendants(root: int | None = None) -> list[int]:
     return out
 
 
-def cpu_sample(root: int | None = None) -> CpuSample:
-    """CPU seconds used so far by ``root`` (default: this process) and
-    every descendant: the driver, the JVM and the Python workers."""
+def descendants() -> list[int]:
+    """Live processes started, directly or not, by this process."""
+    return _tree(_proc_table())[1:]
+
+
+def cpu_sample() -> CpuSample:
+    """CPU seconds used so far by this process and every descendant:
+    the driver, the JVM and the Python workers."""
     table = _proc_table()
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _, _) in table.items():
-        children.setdefault(ppid, []).append(pid)
     total = python = 0.0
-    stack = [root or os.getpid()]
-    while stack:
-        pid = stack.pop()
-        if pid not in table:
-            continue
+    for pid in _tree(table):
         _, cpu, is_py = table[pid]
         total += cpu
         python += cpu if is_py else 0.0
-        stack.extend(children.get(pid, []))
     return CpuSample(total, python)
 
 

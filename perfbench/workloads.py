@@ -224,14 +224,23 @@ def lifecycle_pass(ctx: Ctx, root: str) -> PassResult:
                       rec_bytes, counts)
 
 
+def knots(curve: str) -> list:
+    """A curve column as its x and y knots, float32 widened exactly."""
+    return [
+        F.transform(curve, lambda p: p[axis].cast("double")).alias(f"curve_{axis}")
+        for axis in ("x", "y")
+    ]
+
+
 def specific_rows(statistics):
     """The specific and semi_specific statistics as oracle.STAT_COLS."""
     return (
         statistics.filter(F.col("scope").isin("specific", "semi_specific"))
         .select(
-            *[c for c in oracle_mod.STAT_COLS if c not in ("focus_delay", "n_points")],
+            *[c for c in oracle_mod.STAT_COLS
+              if c not in ("focus_delay", "curve_x", "curve_y")],
             F.col("focus_delay").cast("double").alias("focus_delay"),
-            F.size("curve").alias("n_points"),
+            *knots("curve"),
         )
         .toPandas()
     )
@@ -251,7 +260,7 @@ def _check_lifecycle(ctx: Ctx, stats_path: str, preds_path: str) -> list[str]:
         F.col("precision_type").cast("int").alias("precision_type"),
         F.col("origin_type").cast("int").alias("origin_type"),
         "sample_size",
-        F.size("prediction_curve").alias("n_curve_points"),
+        *knots("prediction_curve"),
     ).toPandas()
     return ctx.oracle.check_statistics(stats) + ctx.oracle.check_predictions(preds)
 
