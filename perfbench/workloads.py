@@ -64,10 +64,8 @@ from inputs import Inputs
 from isolation import Isolation, require_fresh
 from tracing import Tracer, cpu_sample
 
-#: incremental import: the feed files land in this many batches; set-up
-#: lands the first WARM_BATCHES of them once
+#: incremental import: the feed files land in this many batches
 IMPORT_BATCHES = 8
-WARM_BATCHES = 1
 #: departure-board serving after a traced lifecycle pass
 BOARD_PAGES = 6  # distinct pages; exactly this many requests run Spark
 BOARD_REQUESTS = 120
@@ -408,9 +406,9 @@ def serve_boards(ctx: Ctx, preds_path: str, stop_times) -> dict:
 # --- incremental import -------------------------------------------------------
 
 
-def import_pass(ctx: Ctx, root: str, batches: int = IMPORT_BATCHES) -> PassResult:
-    """Land the first ``batches`` of IMPORT_BATCHES file batches, draining
-    and checking the records table after each."""
+def import_pass(ctx: Ctx, root: str) -> PassResult:
+    """Land the feed files in IMPORT_BATCHES batches, draining and
+    checking the records table after each."""
     spark = ctx.spark
     land, ckpt, records_path = (
         os.path.join(root, n) for n in ("rt", "checkpoint", "records")
@@ -447,7 +445,7 @@ def import_pass(ctx: Ctx, root: str, batches: int = IMPORT_BATCHES) -> PassResul
     if ctx.tracer is not None:
         stream_pipeline.build_records = traced_build
     try:
-        for b in range(batches):
+        for b in range(IMPORT_BATCHES):
             names = files[b * per:(b + 1) * per]
             cpu0 = cpu_sample()
             t0 = time.perf_counter()
@@ -478,5 +476,5 @@ def import_pass(ctx: Ctx, root: str, batches: int = IMPORT_BATCHES) -> PassResul
         stream_pipeline.build_records = real_build
     shutil.rmtree(root)
     ctx.record(ctx.isolation.check([root]))
-    counts["stream.batches"] = batches
+    counts["stream.batches"] = IMPORT_BATCHES
     return PassResult(sum(batch_s), cpu_s, batch_s, len(landed), written, counts)
