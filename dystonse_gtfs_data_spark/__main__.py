@@ -124,7 +124,10 @@ def cmd_import(spark, args) -> None:
     from .sources.rt import decode_feed_messages
     from .sources.sinks import load_statistics, save_predictions
 
-    sched = read_gtfs(spark, _schedule_path(args))
+    schedule_path = _schedule_path(args)
+    sched = read_gtfs(spark, schedule_path)
+    # records carry the schedule's name, not the feed file they came from
+    schedule_name = os.path.basename(os.path.normpath(schedule_path))
     rt_dir = os.path.join(args.dir, "rt")
     records_path = os.path.join(args.dir, "db", "records")
 
@@ -145,13 +148,15 @@ def cmd_import(spark, args) -> None:
             available_now=True,
             ping_url=args.ping_url,
             wire=True,
+            schedule_file_name=schedule_name,
         )
         q.awaitTermination()
     else:
         feed_files = spark.read.format("binaryFile").load(rt_dir)
         updates = decode_feed_messages(feed_files)
         records = build_records(
-            updates, sched["trips"], sched["stop_times"], source=args.source
+            updates, sched["trips"], sched["stop_times"], source=args.source,
+            schedule_file_name=schedule_name,
         )
         _merge_into_records(spark, records, records_path)
     n = spark.read.parquet(records_path).count()

@@ -16,6 +16,8 @@ documented behavior and kept deterministic; tests pin them.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 __all__ = [
@@ -126,6 +128,62 @@ def make_curve(values, focus: float | None = None) -> tuple[Curve, float] | None
     return Curve(xs, ys), total
 
 
+#: Interior points from which one RDP segment's errors are computed as
+#: one numpy expression; shorter segments (nearly all of a delay CDF's)
+#: loop over Python floats, which costs less than the numpy call overhead.
+_RDP_NUMPY_SEGMENT = 64
+
+
+def _rdp_thresholds(xs: np.ndarray, ys: np.ndarray, floor: float) -> np.ndarray:
+    """Per point, the largest tolerance at which Ramer–Douglas–Peucker
+    (vertical distance) keeps it: ``simplify(c, ε)`` keeps exactly the
+    points whose threshold is > ε, for every ε >= ``floor``.
+
+    The RDP split point of a segment — the first interior point of
+    largest error — does not depend on ε; only the decision to split
+    (error > ε) does.  A point survives iff every split on its path from
+    the root, its own included, has error > ε, so its threshold is the
+    minimum split error along that path (the endpoints: +inf).  Splits
+    with error <= ``floor`` are not descended (their subtrees read -inf),
+    and a segment whose largest error is NaN (repeated x: 0/0) never
+    splits, as ``NaN > ε`` is false.
+
+    Both error paths evaluate ``y_lo + dy * (x - x_lo) / dx`` with the
+    same IEEE double operations in the same order, so the choice between
+    them never changes a split."""
+    n = len(xs)
+    xl, yl = xs.tolist(), ys.tolist()
+    thr = [-math.inf] * n
+    thr[0] = thr[-1] = math.inf
+    stack = [(0, n - 1, math.inf)]
+    while stack:
+        lo, hi, bound = stack.pop()
+        if hi - lo < 2:
+            continue
+        x0, y0 = xl[lo], yl[lo]
+        dy, dx = yl[hi] - y0, xl[hi] - x0
+        if dx == 0.0 or hi - lo > _RDP_NUMPY_SEGMENT:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                err = np.abs(ys[lo + 1 : hi] - (y0 + dy * (xs[lo + 1 : hi] - x0) / dx))
+            imax = int(np.argmax(err))  # the first NaN, else the first maximum
+            best, mid = float(err[imax]), lo + 1 + imax
+        else:
+            best, mid = -1.0, lo
+            for i in range(lo + 1, hi):
+                e = abs(yl[i] - (y0 + dy * (xl[i] - x0) / dx))
+                if e > best:
+                    best, mid = e, i
+                elif e != e:  # NaN: np.argmax's first NaN wins
+                    best, mid = e, i
+                    break
+        if best > floor:
+            b = min(best, bound)
+            thr[mid] = b
+            stack.append((lo, mid, b))
+            stack.append((mid, hi, b))
+    return np.array(thr)
+
+
 def simplify(curve: Curve, epsilon: float) -> Curve:
     """Remove points reproducible by linear interpolation within ``epsilon``
     vertical tolerance (Ramer–Douglas–Peucker on the y axis).
@@ -135,41 +193,26 @@ def simplify(curve: Curve, epsilon: float) -> Curve:
     time_curve.rs:73); the crate's exact algorithm is unavailable, so we
     define RDP with vertical distance — deterministic and tolerance-true.
     """
-    xs, ys = curve.xs, curve.ys
-    n = len(xs)
-    keep = np.zeros(n, dtype=bool)
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        lo, hi = stack.pop()
-        if hi - lo < 2:
-            continue
-        seg_x = xs[lo + 1 : hi]
-        interp = ys[lo] + (ys[hi] - ys[lo]) * (seg_x - xs[lo]) / (xs[hi] - xs[lo])
-        err = np.abs(ys[lo + 1 : hi] - interp)
-        imax = int(np.argmax(err))
-        if err[imax] > epsilon:
-            mid = lo + 1 + imax
-            keep[mid] = True
-            stack.append((lo, mid))
-            stack.append((mid, hi))
-    return Curve(xs[keep], ys[keep])
+    keep = _rdp_thresholds(curve.xs, curve.ys, epsilon) > epsilon
+    return Curve(curve.xs[keep], curve.ys[keep])
 
 
 def simplify_to_max_points(curve: Curve, max_points: int = 30) -> Curve:
-    """Escalate the simplify tolerance until the curve fits in
-    ``max_points`` — the Spark analog of the reference's
-    serialize_compact_limited(120) byte cap on stored prediction curves
-    (src/importer/per_schedule_importer.rs:362): bounded storage, coarser
-    tail resolution."""
+    """Escalate the simplify tolerance (0.001, doubling up to 0.512) until
+    the curve fits in ``max_points`` — the Spark analog of the
+    reference's serialize_compact_limited(120) byte cap on stored
+    prediction curves (src/importer/per_schedule_importer.rs:362):
+    bounded storage, coarser tail resolution.  One RDP tree serves every
+    tolerance tried."""
     if len(curve.xs) <= max_points:
         return curve
     eps = 0.001
-    out = curve
-    while len(out.xs) > max_points and eps <= 0.512:
-        out = simplify(curve, eps)
+    thr = _rdp_thresholds(curve.xs, curve.ys, eps)
+    while True:
+        keep = thr > eps
         eps *= 2.0
-    return out
+        if np.count_nonzero(keep) <= max_points or eps > 0.512:
+            return Curve(curve.xs[keep], curve.ys[keep])
 
 
 def average_curves(curves: list[Curve]) -> Curve:
@@ -279,14 +322,15 @@ def build_curve_set(
     """Stop-pair curve-set builder (generate_curves_for_stop_pair,
     src/analyser/specific_curves.rs:371-426).
 
-    ``pairs`` are (delay_at_start, delay_at_end).  Sort by start delay;
+    ``pairs`` are (delay_at_start, delay_at_end), as a sequence of
+    pairs or an (n, 2) array.  Sort by start delay;
     build the initial-delay ECDF; place markers; for each (lower, mid,
     upper) marker window build a focused ECDF of the end delays whose
     start delay falls in the window; simplify(0.001); drop curves whose
     x-span < 13 s.  Returns (list of (focus_delay, curve), sample_size)
     where sample_size is the mean samples per kept curve, or None.
     """
-    if not pairs:
+    if len(pairs) == 0:
         return None
     arr = np.asarray(pairs, dtype=np.float64)
     order = np.argsort(arr[:, 0], kind="stable")

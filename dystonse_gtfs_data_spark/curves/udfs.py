@@ -29,7 +29,7 @@ CURVE_DDL = "array<struct<x: float, y: float>>"
 
 
 def curve_to_rows(curve: Curve) -> list[dict[str, float]]:
-    return [{"x": float(x), "y": float(y)} for x, y in zip(curve.xs, curve.ys)]
+    return [{"x": x, "y": y} for x, y in zip(curve.xs.tolist(), curve.ys.tolist())]
 
 
 def rows_to_curve(rows) -> Curve | None:

@@ -12,9 +12,13 @@ The final grid covers every (route_type, section, slot∈11, event) key,
 gaps filled from level 2, then level 3 (PrecisionType General /
 FallbackGeneral / SuperGeneral).
 
-Spark shape: one groupBy per level with curve UDAFs; the final grid is
-a small cross join (11 types × 3 sections × 11 slots × 2 events = 726
-keys) resolved with broadcast left joins + coalesce — no driver loops.
+Spark shape: the per-variant ECDFs scale with the feed and are built by
+a batched grouped map (:func:`variant_section_curves`).  Their number is
+bounded by variants × grid keys, and level 3 needs all of them in one
+place anyway, so the rollup itself — all three levels and the grid fill
+(8 types × 3 sections × 11 slots × 2 events = 528 keys) — runs as ONE
+``groupBy().applyInPandas`` task over the variant curves: one stage, no
+cache, no joins.
 """
 
 from __future__ import annotations
@@ -67,26 +71,22 @@ def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
         )
     stacked = per_event[0].unionByName(per_event[1])
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["route_type", "route_section", "time_slot_id", "event_type", "curve", "sample_size"]
+    def build(key: tuple, pdf: pd.DataFrame) -> dict | None:
         values = pdf["delay"].to_numpy(dtype=float)
         if len(values) < MIN_DATA_FOR_CURVE:
-            return pd.DataFrame(columns=cols)
+            return None
         made = make_curve(values, None)
         if made is None:
-            return pd.DataFrame(columns=cols)
-        curve = simplify(made[0], 0.001)
-        head = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                "route_type": [int(head["route_type"])],
-                "route_section": [head["route_section"]],
-                "time_slot_id": [int(head["time_slot_id"])],
-                "event_type": [int(head["event_type"])],
-                "curve": [curve_to_rows(curve)],
-                "sample_size": [len(values)],
-            }
-        )
+            return None
+        route_type, section, slot, event_type = key[:4]
+        return {
+            "route_type": [int(route_type)],
+            "route_section": [section],
+            "time_slot_id": [int(slot)],
+            "event_type": [int(event_type)],
+            "curve": [curve_to_rows(simplify(made[0], 0.001))],
+            "sample_size": [len(values)],
+        }
 
     schema = (
         "route_type int, route_section string, time_slot_id int, event_type int, "
@@ -95,9 +95,7 @@ def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
     # batched grouped-map dispatch (see stop_pair_curve_sets): one
     # Python invocation per Arrow batch over the variant-keyed groups
     # (the ×R-scaling group space); the per-group ECDF is
-    # order-insensitive (make_curve np.sorts internally).  The rollup
-    # levels below keep plain applyInPandas — their group counts are
-    # grid-bounded, not corpus-scaling.
+    # order-insensitive (make_curve np.sorts internally)
     from .grouped_map import map_grouped_in_pandas
 
     return map_grouped_in_pandas(
@@ -111,99 +109,78 @@ def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
     )
 
 
-_MEMBER_SORT_COLS = [
-    "route_type", "route_section", "time_slot_id", "event_type",
-    "route_id", "route_variant",
-]
+_GRID_KEYS = ["route_type", "route_section", "time_slot_id", "event_type"]
+_MEMBER_SORT_COLS = [*_GRID_KEYS, "route_id", "route_variant"]
 
 
-def _average_udf(group_cols: list[str], extra_simplify: float | None = None):
-    cols = group_cols + ["curve", "sample_size"]
+def _average(
+    members: pd.DataFrame, curves: list[Curve | None], extra_simplify: float | None = None
+) -> tuple[list, int] | None:
+    """One rollup cell: the simplified mean of ``members``' curves
+    (``curves[i]`` is the parsed curve of member row ``i``) and the
+    mean of their sample sizes, or None without a curve."""
+    # float summation in average_curves is order-sensitive at the ulp
+    # level, so members are summed in _MEMBER_SORT_COLS order, as in the
+    # single-node oracle.  The variant curves carry only the grid keys of
+    # those columns, so within one level-1 cell members keep the order
+    # in which the shuffle delivered them (a stable sort).
+    members = members.sort_values([c for c in _MEMBER_SORT_COLS if c in members.columns])
+    picked = []
+    for i in members.index:
+        c = curves[i]
+        if c is not None:
+            picked.append(simplify(c, extra_simplify) if extra_simplify else c)
+    if not picked:
+        return None
+    merged = simplify(average_curves(picked), 0.001)
+    return curve_to_rows(merged), int(members["sample_size"].mean())
 
-    def avg(pdf: pd.DataFrame) -> pd.DataFrame:
-        # deterministic member order: float summation in average_curves is
-        # order-sensitive at the ulp level, and applyInPandas row order is
-        # partition-arrival order — sort so reruns and the single-node
-        # oracle sum in the same order
-        pdf = pdf.sort_values([c for c in _MEMBER_SORT_COLS if c in pdf.columns])
-        curves: list[Curve] = []
-        for rows in pdf["curve"]:
-            c = rows_to_curve(rows)
-            if c is not None:
-                curves.append(simplify(c, extra_simplify) if extra_simplify else c)
-        if not curves:
-            return pd.DataFrame(columns=cols)
-        merged = simplify(average_curves(curves), 0.001)
-        sample = int(pdf["sample_size"].mean())  # sample_size = mean of inputs
-        head = pdf.iloc[0]
-        out = {c: [head[c]] for c in group_cols}
-        out["curve"] = [curve_to_rows(merged)]
-        out["sample_size"] = [sample]
-        return pd.DataFrame(out)
 
-    return avg
+def _rollup(pdf: pd.DataFrame) -> pd.DataFrame:
+    """All variant curves → every grid key's curve, precision type and
+    sample size (levels 1-3 and the gap fill in one pass)."""
+    pdf = pdf.reset_index(drop=True)
+    curves = [rows_to_curve(rows) for rows in pdf["curve"]]
+    level1 = {}
+    for key, members in pdf.groupby(_GRID_KEYS, sort=False):
+        got = _average(members, curves)
+        if got is not None:
+            level1[key] = got
+    level2 = {}
+    for key, members in pdf.groupby(["route_type", "event_type"], sort=False):
+        got = _average(members, curves)
+        if got is not None:
+            level2[key] = got
+    level3 = _average(pdf, curves, extra_simplify=0.01)
+
+    out: dict[str, list] = {c: [] for c in (*_GRID_KEYS, "curve", "precision_type", "sample_size")}
+    for rt in ROUTE_TYPES:
+        for sec in SECTIONS:
+            for slot in SLOT_IDS:
+                for et in (EVENT_ARRIVAL, EVENT_DEPARTURE):
+                    if (rt, sec, slot, et) in level1:
+                        cell, precision = level1[(rt, sec, slot, et)], PRECISION_GENERAL
+                    elif (rt, et) in level2:
+                        cell, precision = level2[(rt, et)], PRECISION_FALLBACK_GENERAL
+                    elif level3 is not None:
+                        cell, precision = level3, PRECISION_SUPER_GENERAL
+                    else:
+                        continue
+                    for c, v in zip(_GRID_KEYS, (rt, sec, slot, et)):
+                        out[c].append(v)
+                    out["curve"].append(cell[0])
+                    out["precision_type"].append(precision)
+                    out["sample_size"].append(cell[1])
+    return pd.DataFrame(out)
 
 
 def default_statistics(enriched: DataFrame, routes: DataFrame) -> DataFrame:
     """The full rollup + gap fill → DELAY_CURVES-shaped rows
     (scope 'default', every grid key populated)."""
-    spark = enriched.sparkSession
-    variant_curves = variant_section_curves(enriched, routes).cache()
-
-    level1 = variant_curves.groupBy(
-        "route_type", "route_section", "time_slot_id", "event_type"
-    ).applyInPandas(
-        _average_udf(["route_type", "route_section", "time_slot_id", "event_type"]),
+    filled = variant_section_curves(enriched, routes).groupBy().applyInPandas(
+        _rollup,
         "route_type int, route_section string, time_slot_id int, event_type int, "
-        "curve array<struct<x: float, y: float>>, sample_size int",
-    )
-    level2 = variant_curves.groupBy("route_type", "event_type").applyInPandas(
-        _average_udf(["route_type", "event_type"]),
-        "route_type int, event_type int, "
-        "curve array<struct<x: float, y: float>>, sample_size int",
-    )
-    level3 = (
-        variant_curves.groupBy()
-        .applyInPandas(
-            _average_udf([], extra_simplify=0.01),
-            "curve array<struct<x: float, y: float>>, sample_size int",
-        )
-    )
-
-    grid = spark.createDataFrame(
-        [
-            (rt, sec, slot, et)
-            for rt in ROUTE_TYPES
-            for sec in SECTIONS
-            for slot in SLOT_IDS
-            for et in (EVENT_ARRIVAL, EVENT_DEPARTURE)
-        ],
-        "route_type int, route_section string, time_slot_id int, event_type int",
-    )
-
-    l1 = level1.select(
-        "route_type", "route_section", "time_slot_id", "event_type",
-        F.col("curve").alias("c1"), F.col("sample_size").alias("n1"),
-    )
-    l2 = level2.select(
-        "route_type", "event_type",
-        F.col("curve").alias("c2"), F.col("sample_size").alias("n2"),
-    )
-    l3 = level3.select(F.col("curve").alias("c3"), F.col("sample_size").alias("n3"))
-
-    filled = (
-        grid.join(F.broadcast(l1), ["route_type", "route_section", "time_slot_id", "event_type"], "left")
-        .join(F.broadcast(l2), ["route_type", "event_type"], "left")
-        .crossJoin(F.broadcast(l3))
-        .withColumn(
-            "precision_type",
-            F.when(F.col("c1").isNotNull(), F.lit(PRECISION_GENERAL))
-            .when(F.col("c2").isNotNull(), F.lit(PRECISION_FALLBACK_GENERAL))
-            .otherwise(F.lit(PRECISION_SUPER_GENERAL)),
-        )
-        .withColumn("curve", F.coalesce("c1", "c2", "c3"))
-        .withColumn("sample_size", F.coalesce("n1", "n2", "n3"))
-        .filter(F.col("curve").isNotNull())
+        "curve array<struct<x: float, y: float>>, precision_type int, sample_size int",
     )
     return filled.select(
         F.lit("default").alias("scope"),

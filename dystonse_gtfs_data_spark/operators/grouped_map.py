@@ -1,34 +1,36 @@
-"""Batched grouped-map execution: ``applyInPandas`` semantics at
-``mapInPandas`` cost.
+"""Batched grouped-map execution: one Python invocation per Arrow batch
+for a per-group function.
 
 ``DataFrame.groupBy(keys).applyInPandas(fn)`` pays one Arrow
-round-trip + Python UDF dispatch PER GROUP.  For curve-style
-workloads — millions of small groups, trivial per-group math — that
-dispatch dominates the stage (the same cost class the round-9
-streaming work measured at ~0.6 ms/key/invocation and fixed by bucket
-keying).  :func:`map_grouped_in_pandas` runs the identical per-group
-function over key-sorted partitions via ``mapInPandas``: one Python
-invocation per ARROW BATCH (thousands of rows, hundreds of groups),
-with a carry buffer for the group that spans a batch boundary.
+round-trip, one Python UDF dispatch and one pandas frame PER GROUP.
+For curve-style workloads — many small groups, little math per group —
+that fixed cost dominates the stage.  :func:`map_grouped_in_pandas`
+runs the per-group function over key-sorted partitions via
+``mapInPandas`` instead, with a carry buffer for the group that spans a
+batch boundary.
 
-Output-identical to the applyInPandas form by construction: rows are
-hash-repartitioned on the group keys (all rows of a group in one
-partition) and sorted by (keys, *order_cols) within partitions, so
-each group arrives contiguous and in a deterministic row order —
-stronger than applyInPandas, whose within-group row order follows
-partition arrival (the in-repo per-group fns re-sort internally, so
-both forms feed the group fn identical frames).
+The contract: ``fn(key, pdf)`` gets the group's key values as a tuple
+and its rows as a frame, and returns the group's output rows as a
+mapping of column name to an equal-length sequence, or ``None`` when
+the group yields no rows.  The runner concatenates the mappings of all
+groups that end in one input batch and builds ONE pandas frame per
+batch.  Every group function of a call must return the same columns,
+in the order of the output schema.
 
-Memory: per-task state is one Arrow batch plus the trailing group —
-NOT the per-task hash-agg state that made wide curve builds cliff at
-~60 k groups/task (specific_curves._CURVE_SET_GROUPS_PER_TASK
-history); the explicit partition count is still taken for
-parallelism, not for memory survival.
+Rows are hash-repartitioned on the group keys (all rows of a group in
+one partition) and sorted by (keys, *order_cols) within partitions, so
+each group reaches ``fn`` exactly once, contiguous and in a
+deterministic row order.
+
+Memory: per-task state is one Arrow batch plus the trailing group, not
+a hash-aggregation state over all the task's groups; the explicit
+partition count is taken for parallelism.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterator, Mapping, Sequence
+from itertools import chain
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -46,9 +48,25 @@ def _same_key(a: tuple | None, b: tuple | None) -> bool:
     )
 
 
+#: What a group function returns: equal-length column sequences, or
+#: None when the group yields no rows.
+GroupRows = Mapping[str, Sequence] | None
+
+
+def _frame(outs: list[Mapping[str, Sequence]]) -> pd.DataFrame | None:
+    """One frame from the column mappings of a batch's groups, or None
+    when they hold no rows."""
+    if not outs:
+        return None
+    frame = pd.DataFrame(
+        {c: list(chain.from_iterable(o[c] for o in outs)) for c in outs[0]}
+    )
+    return frame if len(frame) else None
+
+
 def _make_runner(
     keys: Sequence[str],
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
+    fn: Callable[[tuple, pd.DataFrame], GroupRows],
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     key_list = list(keys)
 
@@ -62,21 +80,21 @@ def _make_runner(
         carry: list[pd.DataFrame] = []
         carry_key: tuple | None = None
 
-        def _flush() -> pd.DataFrame | None:
+        def _flush(outs: list) -> None:
             nonlocal carry, carry_key
-            if not carry:
-                return None
-            g = (
-                carry[0]
-                if len(carry) == 1
-                else pd.concat(carry, ignore_index=True)
-            )
+            g = carry[0] if len(carry) == 1 else pd.concat(carry, ignore_index=True)
+            _call(carry_key, g, outs)
             carry, carry_key = [], None
-            return fn(g.reset_index(drop=True))
+
+        def _call(key: tuple, gpdf: pd.DataFrame, outs: list) -> None:
+            got = fn(key, gpdf.reset_index(drop=True))
+            if got is not None:
+                outs.append(got)
 
         for pdf in batches:
             if pdf.empty:
                 continue
+            outs: list[Mapping[str, Sequence]] = []
             # sort=False → groups in order of appearance; the input is
             # key-sorted, so groups are contiguous and the LAST group
             # may continue in the next batch — hold it back
@@ -86,31 +104,31 @@ def _make_runner(
             groups = list(iter(pdf.groupby(key_list, sort=False, dropna=False)))
             first_key = _norm_name(groups[0][0])
             if carry and not _same_key(carry_key, first_key):
-                out = _flush()
-                if out is not None and len(out):
-                    yield out
+                _flush(outs)
             if len(groups) == 1:
                 # whole batch is one group: append raw, defer the concat
                 carry.append(groups[0][1])
                 carry_key = first_key
-                continue
-            start = 0
-            if carry:
-                # ≥2 groups in this batch → the continued group ends here
-                carry.append(groups[0][1])
-                out = _flush()
-                if out is not None and len(out):
-                    yield out
-                start = 1
-            for _, gpdf in groups[start:-1]:
-                out = fn(gpdf.reset_index(drop=True))
-                if len(out):
-                    yield out
-            carry = [groups[-1][1]]
-            carry_key = _norm_name(groups[-1][0])
-        out = _flush()
-        if out is not None and len(out):
-            yield out
+            else:
+                start = 0
+                if carry:
+                    # ≥2 groups in this batch → the continued group ends here
+                    carry.append(groups[0][1])
+                    _flush(outs)
+                    start = 1
+                for name, gpdf in groups[start:-1]:
+                    _call(_norm_name(name), gpdf, outs)
+                carry = [groups[-1][1]]
+                carry_key = _norm_name(groups[-1][0])
+            out = _frame(outs)
+            if out is not None:
+                yield out
+        if carry:
+            outs = []
+            _flush(outs)
+            out = _frame(outs)
+            if out is not None:
+                yield out
 
     return _runner
 
@@ -118,13 +136,15 @@ def _make_runner(
 def map_grouped_in_pandas(
     df: DataFrame,
     keys: Sequence[str],
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
+    fn: Callable[[tuple, pd.DataFrame], GroupRows],
     schema: str,
     num_partitions: int | None = None,
     order_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Run ``fn`` once per distinct ``keys`` group of ``df`` (the
-    applyInPandas contract) at one Python invocation per Arrow batch.
+    """Run ``fn(key, pdf)`` once per distinct ``keys`` group of ``df``
+    at one Python invocation per Arrow batch.  ``key`` is the group's
+    key values as a tuple, ``pdf`` its rows; ``fn`` returns its output
+    rows as a column mapping (see the module docstring) or None.
 
     ``num_partitions`` sizes the explicit hash repartition on the group
     keys (defaults to the session shuffle-partition setting via plain

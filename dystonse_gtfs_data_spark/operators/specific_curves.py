@@ -16,6 +16,7 @@ route_variant) — the unit the reference holds in memory — so a
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -136,30 +137,23 @@ def project_missing_delays(records: DataFrame, stop_times: DataFrame) -> DataFra
     )
 
 
-def _ecdf_udf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Grouped UDF: raw delay values → one general_delay curve row."""
+def _ecdf_udf(key: tuple, pdf: pd.DataFrame) -> dict | None:
+    """Grouped fn: raw delay values → one general_delay curve row."""
     values = pdf["delay"].to_numpy(dtype=float)
     if len(values) < MIN_DATA_FOR_GENERAL_CURVE:
-        return pd.DataFrame(
-            columns=["route_id", "route_variant", "stop_index", "event_type", "curve", "sample_size"]
-        )
+        return None
     made = make_curve(values, None)
     if made is None:
-        return pd.DataFrame(
-            columns=["route_id", "route_variant", "stop_index", "event_type", "curve", "sample_size"]
-        )
-    curve = simplify(made[0], 0.01)
-    head = pdf.iloc[0]
-    return pd.DataFrame(
-        {
-            "route_id": [head["route_id"]],
-            "route_variant": [head["route_variant"]],
-            "stop_index": [int(head["stop_index"])],
-            "event_type": [int(head["event_type"])],
-            "curve": [curve_to_rows(curve)],
-            "sample_size": [len(values)],
-        }
-    )
+        return None
+    route_id, route_variant, stop_index, event_type = key
+    return {
+        "route_id": [route_id],
+        "route_variant": [route_variant],
+        "stop_index": [int(stop_index)],
+        "event_type": [int(event_type)],
+        "curve": [curve_to_rows(simplify(made[0], 0.01))],
+        "sample_size": [len(values)],
+    }
 
 
 _GENERAL_SCHEMA = (
@@ -200,36 +194,32 @@ def general_delay_curves(enriched: DataFrame) -> DataFrame:
     )
 
 
-def _curve_set_udf(pdf: pd.DataFrame) -> pd.DataFrame:
+def _curve_set_udf(key: tuple, pdf: pd.DataFrame) -> dict | None:
+    if len(pdf) <= MIN_PAIRS_FOR_CURVE_SET:
+        return None
     # deterministic pair order: build_curve_set's stable sort breaks start-
-    # delay ties by input order, and applyInPandas row order follows
-    # partition arrival — sort fully so reruns (and the single-node
-    # differential oracle) produce identical curves
-    pairs = sorted(zip(pdf["d_start"], pdf["d_end"]))
-    cols = [
-        "route_id", "route_variant", "start_stop_index", "end_stop_index",
-        "time_slot_id", "event_type", "focus_delay", "curve", "sample_size",
-    ]
-    if len(pairs) <= MIN_PAIRS_FOR_CURVE_SET:
-        return pd.DataFrame(columns=cols)
+    # delay ties by input order, so sort fully by (d_start, d_end) — the
+    # order the partition sort already delivers — so reruns and the
+    # single-node differential oracle produce identical curves
+    pairs = pdf[["d_start", "d_end"]].to_numpy(dtype=np.float64)
+    pairs = pairs[np.lexsort((pairs[:, 1], pairs[:, 0]))]
     built = build_curve_set(pairs)
     if built is None:
-        return pd.DataFrame(columns=cols)
+        return None
     curves, sample_size = built
-    head = pdf.iloc[0]
-    return pd.DataFrame(
-        {
-            "route_id": [head["route_id"]] * len(curves),
-            "route_variant": [head["route_variant"]] * len(curves),
-            "start_stop_index": [int(head["start_stop_index"])] * len(curves),
-            "end_stop_index": [int(head["end_stop_index"])] * len(curves),
-            "time_slot_id": [int(head["time_slot_id"])] * len(curves),
-            "event_type": [int(head["event_type"])] * len(curves),
-            "focus_delay": [focus for focus, _ in curves],
-            "curve": [curve_to_rows(c) for _, c in curves],
-            "sample_size": [sample_size] * len(curves),
-        }
-    )
+    route_id, route_variant, start, end, slot, event_type = key
+    n = len(curves)
+    return {
+        "route_id": [route_id] * n,
+        "route_variant": [route_variant] * n,
+        "start_stop_index": [int(start)] * n,
+        "end_stop_index": [int(end)] * n,
+        "time_slot_id": [int(slot)] * n,
+        "event_type": [int(event_type)] * n,
+        "focus_delay": [focus for focus, _ in curves],
+        "curve": [curve_to_rows(c) for _, c in curves],
+        "sample_size": [sample_size] * n,
+    }
 
 
 _CURVE_SET_SCHEMA = (
@@ -240,7 +230,7 @@ _CURVE_SET_SCHEMA = (
 
 DEFAULT_SLOT = 12
 
-#: Groups-aware sizing of the curve-set applyInPandas stage.  The
+#: Groups-aware sizing of the curve-set grouped-map stage.  The
 #: W=100@R=100 width rehearsal (BENCH_gtfs_scaled.json) found the
 #: binding constraint is per-task AGGREGATION STATE (groups × pair
 #: lists), not shuffle bytes: inheriting the session's shuffle
@@ -261,7 +251,7 @@ _CURVE_SET_MAX_PARTITIONS = 65536
 
 #: Estimate cache keyed on (Spark application id, plan semanticHash):
 #: the same enriched subtree asked for twice — the catalog query
-#: re-built per run, a test loop, a staged+fused A/B — pays the eager
+#: re-built per run, a test loop — pays the eager
 #: group-count job ONCE per session instead of once per construction
 #: (round-10 verdict task: default construction should stop running a
 #: Spark job per build).  semanticHash canonicalizes the analyzed
@@ -327,7 +317,6 @@ def _curve_set_partitions(enriched: DataFrame) -> int:
 def stop_pair_curve_sets(
     enriched: DataFrame,
     num_partitions: int | None = None,
-    per_group_dispatch: bool = False,
 ) -> DataFrame:
     """A7/J4: the stop-pair self-join + curve-set build.
 
@@ -344,23 +333,18 @@ def stop_pair_curve_sets(
     :func:`_curve_set_partitions` group-count estimate over the
     enriched subtree that sizes the curve-agg repartition — the FIRST
     time a given subtree is seen; repeat constructions over the same
-    plan (re-built catalog queries, A/B legs, test loops) hit the
+    plan (re-built catalog queries, test loops) hit the
     per-(application, semanticHash) estimate cache and run zero jobs.
     Callers constructing plans without executing them (or who already
     know the group count) can pass an explicit ``num_partitions`` to
     keep even the first construction lazy.
 
-    Dispatch (round-10): the curve build runs through
+    Dispatch: the curve build runs through
     :func:`..operators.grouped_map.map_grouped_in_pandas` — one Python
-    invocation per Arrow batch instead of one per group, the batch
-    analog of the round-9 streaming bucket-keying fix.  Measured
-    (round-10 same-session A/B, output-identical including curve
-    floats): R=1000 109.9 s per-group → 68.4–80.6 s batched (~1.5×);
-    W=100@R=100 (5.79 M curves) 429.8 s → 327.7 s (1.3×) — the
-    per-group Arrow dispatch was ~30-40% of the stage, the rest is the
-    pair self-join and the numpy curve math itself.
-    ``per_group_dispatch=True`` keeps the applyInPandas form as the
-    A/B leg (parity pytest-pinned).
+    invocation and one output frame per Arrow batch, not one per group
+    as ``applyInPandas`` would pay.  Rows reach the group function
+    sorted by (keys, d_start, d_end), so each group's pair order is
+    deterministic.
     """
     starts = enriched.filter(F.col("delay_departure").isNotNull()).select(
         "route_id",
@@ -423,21 +407,14 @@ def stop_pair_curve_sets(
         "route_id", "route_variant", "start_stop_index", "end_stop_index",
         "time_slot_id", "event_type",
     ]
-    # explicit hash repartition on the group keys: satisfies the
-    # applyInPandas distribution requirement (no second exchange), is
-    # exempt from AQE byte-coalescing, and its count comes from the
-    # group estimate — see _curve_set_partitions
+    # explicit hash repartition on the group keys: puts each group in
+    # one partition, is exempt from AQE byte-coalescing, and its count
+    # comes from the group estimate — see _curve_set_partitions
     n_parts = (
         num_partitions
         if num_partitions is not None
         else _curve_set_partitions(enriched)
     )
-    if per_group_dispatch:
-        return (
-            all_pairs.repartition(n_parts, *keys)
-            .groupBy(*keys)
-            .applyInPandas(_curve_set_udf, _CURVE_SET_SCHEMA)
-        )
     from .grouped_map import map_grouped_in_pandas
 
     # (d_start, d_end) in the partition sort: build_curve_set's pair

@@ -47,7 +47,7 @@ def master_variants(trips: DataFrame, stop_times: DataFrame) -> DataFrame:
     it (itself if it is a master) and whether it matched reversed."""
     patterns = variant_patterns(trips, stop_times)
 
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
+    def assign(_key: tuple, pdf: pd.DataFrame) -> dict:
         pdf = pdf.sort_values(
             by=["pattern", "route_variant"],
             key=lambda s: s.map(len) if s.name == "pattern" else s,
@@ -70,8 +70,12 @@ def master_variants(trips: DataFrame, stop_times: DataFrame) -> DataFrame:
                 chosen = row["route_variant"]
             out_master.append(chosen)
             out_rev.append(reversed_match)
-        pdf = pdf.assign(master_variant=out_master, reversed=out_rev)
-        return pdf[["route_id", "route_variant", "master_variant", "reversed"]]
+        return {
+            "route_id": pdf["route_id"].tolist(),
+            "route_variant": pdf["route_variant"].tolist(),
+            "master_variant": out_master,
+            "reversed": out_rev,
+        }
 
     # batched grouped-map dispatch (operators/grouped_map): group count
     # = ROUTES, which scales with the feed corpus — per-group Arrow

@@ -70,7 +70,7 @@ STAT_COLS = [
     "focus_delay", "curve", "precision_type", "sample_size",
 ]
 
-# member-order sort used by the Spark _average_udf (default_curves.py)
+# member-order sort used by the Spark rollup's _average (default_curves.py)
 _MEMBER_SORT_COLS = [
     "route_type", "route_section", "time_slot_id", "event_type",
     "route_id", "route_variant",

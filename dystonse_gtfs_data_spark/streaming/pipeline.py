@@ -225,10 +225,15 @@ def start_records_stream(
     available_now: bool = False,
     ping_url: str | None = None,
     wire: bool = False,
+    schedule_file_name: str | None = None,
 ):
     """rt stream → per-batch records build → caller's sink (typically a
     MERGE into the records table).  ``available_now=True`` drains the
     backlog once and stops — batch parity mode for tests/backfills.
+
+    ``schedule_file_name`` tags every record, as in
+    :func:`..operators.records.build_records` (which falls back to the
+    feed file's path when it is None).
 
     ``wire=True`` tails raw GTFS-rt protobuf files (binaryFile source +
     the pure-Python wire decoder) instead of a parquet landing zone —
@@ -243,7 +248,10 @@ def start_records_stream(
     ping = RateLimitedPing(ping_url)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        recs = build_records(batch_df, trips, stop_times, source=source)
+        recs = build_records(
+            batch_df, trips, stop_times, source=source,
+            schedule_file_name=schedule_file_name,
+        )
         # in-batch latest-wins dedup before handing to the sink
         deduped = merge_records(recs.limit(0), recs, key=S.RECORDS_KEY)
         sink(deduped, epoch_id)

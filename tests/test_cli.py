@@ -78,6 +78,17 @@ def data_dir(tmp_path):
     return str(d)
 
 
+def _assert_schedule_tagged(spark, data_dir) -> None:
+    """Every record names the schedule it was matched against, not the
+    feed file it came from."""
+    tags = {
+        r["schedule_file_name"]
+        for r in spark.read.parquet(os.path.join(data_dir, "db", "records"))
+        .select("schedule_file_name").distinct().collect()
+    }
+    assert tags == {"2024-01-01-feed"}
+
+
 def _run(capsys, *argv) -> list[dict]:
     cli_main(list(argv))
     out = capsys.readouterr().out.strip()
@@ -89,6 +100,7 @@ def test_automatic_import_matches_batch(spark, data_dir, capsys):
     out = _run(capsys, *base, "import", "--automatic")
     n_stream = out[0]["records"]
     assert n_stream > 0
+    _assert_schedule_tagged(spark, data_dir)
     # the merge compacts as it lands: a small table is one byte-targeted
     # file, not shuffle-width near-empty fragments per micro-batch
     import glob as _glob
@@ -105,6 +117,7 @@ def test_automatic_import_matches_batch(spark, data_dir, capsys):
         shutil.rmtree(f"{data_dir}/{sub}", ignore_errors=True)
     out = _run(capsys, *base, "import")
     assert out[0]["records"] == n_stream
+    _assert_schedule_tagged(spark, data_dir)
 
 
 def test_full_cli_lifecycle(spark, data_dir, capsys):
@@ -115,6 +128,7 @@ def test_full_cli_lifecycle(spark, data_dir, capsys):
     assert out[0]["command"] == "import"
     assert out[0]["records"] > 0
     assert os.path.exists(os.path.join(data_dir, "db", "records"))
+    _assert_schedule_tagged(spark, data_dir)
 
     # 1b. analyse count: per-interval record report
     out = _run(capsys, *base, "analyse", "--what", "count")
@@ -129,6 +143,7 @@ def test_full_cli_lifecycle(spark, data_dir, capsys):
     # 3. import again: latest-wins merge + realtime predictions
     out = _run(capsys, *base, "import")
     assert any("predictions" in d for d in out)
+    _assert_schedule_tagged(spark, data_dir)
     assert os.path.exists(os.path.join(data_dir, "db", "predictions"))
 
     # 3b. analyse variants: one-family trees and SVG rendering

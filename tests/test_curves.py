@@ -4,8 +4,9 @@ src/analyser/curve_utils.rs:90-91)."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from hypothesis.extra import numpy as hnp
 
 from dystonse_gtfs_data_spark.curves import (
     Curve,
@@ -18,6 +19,7 @@ from dystonse_gtfs_data_spark.curves import (
     transfer_probability,
     walk_time_curve,
 )
+from dystonse_gtfs_data_spark.curves.core import simplify_to_max_points
 
 
 def is_valid_cdf(c: Curve) -> bool:
@@ -113,6 +115,109 @@ class TestSimplify:
         c = Curve([0, 50, 100], [0.0, 0.9, 1.0])
         s = simplify(c, 0.01)
         assert len(s.xs) == 3
+
+
+def stack_rdp(curve: Curve, epsilon: float) -> Curve:
+    """Reference RDP: one segment at a time from an explicit stack, the
+    split at the first interior point of largest vertical error (NaN
+    first, as np.argmax), split iff that error > epsilon."""
+    xs, ys = curve.xs, curve.ys
+    n = len(xs)
+    keep = np.zeros(n, dtype=bool)
+    keep[0] = keep[-1] = True
+    stack = [(0, n - 1)]
+    while stack:
+        lo, hi = stack.pop()
+        if hi - lo < 2:
+            continue
+        seg_x = xs[lo + 1 : hi]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            interp = ys[lo] + (ys[hi] - ys[lo]) * (seg_x - xs[lo]) / (xs[hi] - xs[lo])
+        err = np.abs(ys[lo + 1 : hi] - interp)
+        imax = int(np.argmax(err))
+        if err[imax] > epsilon:
+            mid = lo + 1 + imax
+            keep[mid] = True
+            stack.append((lo, mid))
+            stack.append((mid, hi))
+    return Curve(xs[keep], ys[keep])
+
+
+def stack_rdp_to_max_points(curve: Curve, max_points: int) -> Curve:
+    """Reference cap: a fresh stack RDP per doubling tolerance."""
+    if len(curve.xs) <= max_points:
+        return curve
+    eps = 0.001
+    out = curve
+    while len(out.xs) > max_points and eps <= 0.512:
+        out = stack_rdp(curve, eps)
+        eps *= 2.0
+    return out
+
+
+@st.composite
+def rdp_curves(draw):
+    """Curves of 2-400 points in three shapes: coarse grids of x and y
+    (repeated x, so 0/0 errors, and exact error ties), delay-CDF-like
+    staircases, and free floats."""
+    n = draw(st.integers(2, 400))
+    shape = draw(st.sampled_from(["grid", "cdf", "float"]))
+    if shape == "grid":
+        xs = np.sort(draw(hnp.arrays(np.int64, n, elements=st.integers(-8, 24))))
+        ys = draw(hnp.arrays(np.int64, n, elements=st.integers(0, 8))) / 8.0
+        return Curve(xs.astype(np.float64), ys)
+    if shape == "cdf":
+        steps = draw(hnp.arrays(np.int64, n, elements=st.integers(0, 5)))
+        xs = np.cumsum(steps) * 12.0 - 600.0
+        mass = draw(hnp.arrays(np.int64, n, elements=st.integers(0, 9)))
+        ys = np.cumsum(mass) / max(1, int(mass.sum()))
+        return Curve(xs, ys)
+    floats = st.floats(-1000.0, 1000.0, allow_nan=False, allow_infinity=False)
+    xs = np.sort(draw(hnp.arrays(np.float64, n, elements=floats)))
+    ys = draw(hnp.arrays(np.float64, n, elements=st.floats(0.0, 1.0)))
+    return Curve(xs, ys)
+
+
+def assert_same_curve(got: Curve, want: Curve) -> None:
+    assert np.array_equal(got.xs, want.xs)
+    assert np.array_equal(got.ys, want.ys)
+
+
+class TestSimplifyMatchesStackRdp:
+    """simplify and simplify_to_max_points walk one RDP tree per curve;
+    they must keep exactly the points the segment-at-a-time RDP keeps."""
+
+    EPSILONS = (0.0, 0.001, 0.01, 0.05, 0.512)
+
+    @given(rdp_curves())
+    @example(Curve([0, 1, 2, 3, 4], [0.0, 0.5, 0.0, 0.5, 0.0]))  # tied errors
+    @example(Curve([0, 0, 0, 1, 1, 1], [0.0, 0.2, 0.4, 0.6, 0.8, 1.0]))  # 0/0
+    @example(Curve([5, 5, 5, 5], [0.0, 0.25, 0.5, 1.0]))  # all x repeated
+    @settings(max_examples=300, deadline=None)
+    def test_simplify(self, curve):
+        for eps in self.EPSILONS:
+            assert_same_curve(simplify(curve, eps), stack_rdp(curve, eps))
+
+    @given(rdp_curves())
+    @settings(max_examples=300, deadline=None)
+    def test_simplify_to_max_points(self, curve):
+        for max_points in (2, 30):
+            assert_same_curve(
+                simplify_to_max_points(curve, max_points),
+                stack_rdp_to_max_points(curve, max_points),
+            )
+
+    def test_long_segments_match(self):
+        # segments wider than the Python-float loop take the numpy path
+        rng = np.random.default_rng(7)
+        xs = np.sort(rng.integers(-3000, 3000, 2000)).astype(np.float64)
+        ys = np.sort(rng.random(2000))
+        curve = Curve(xs, ys)
+        for eps in self.EPSILONS:
+            assert_same_curve(simplify(curve, eps), stack_rdp(curve, eps))
+        assert_same_curve(
+            simplify_to_max_points(curve, 30), stack_rdp_to_max_points(curve, 30)
+        )
 
 
 class TestAverage:

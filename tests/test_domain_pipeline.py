@@ -489,41 +489,6 @@ def test_curve_set_partition_estimate_scales_with_groups(spark):
     assert _curve_set_partitions(wide) == expected
 
 
-def test_batched_curve_dispatch_matches_per_group(spark):
-    # round-10: stop_pair_curve_sets runs through map_grouped_in_pandas
-    # (one Python invocation per Arrow batch); the applyInPandas leg is
-    # kept for A/B and the two must be bit-identical, curve floats
-    # included
-    from dystonse_gtfs_data_spark.operators.specific_curves import (
-        enrich_records,
-        project_missing_delays,
-        stop_indexed,
-        stop_pair_curve_sets,
-    )
-    from dystonse_gtfs_data_spark.sources.demo import scale_fixture
-
-    sched, recs = scale_fixture(spark, 2, jitter=False)
-    sti = stop_indexed(sched["stop_times"])
-    enriched = enrich_records(project_missing_delays(recs, sti), sti)
-
-    def canon(df):
-        return sorted(
-            (
-                r["route_id"], r["route_variant"], r["start_stop_index"],
-                r["end_stop_index"], r["time_slot_id"], r["event_type"],
-                r["focus_delay"],
-                tuple((p["x"], p["y"]) for p in r["curve"]),
-                r["sample_size"],
-            )
-            for r in df.collect()
-        )
-
-    batched = canon(stop_pair_curve_sets(enriched))
-    per_group = canon(stop_pair_curve_sets(enriched, per_group_dispatch=True))
-    assert batched == per_group
-    assert batched  # non-trivial fixture
-
-
 def test_curve_set_partition_estimate_cached_per_plan(spark):
     """Repeat construction over the same enriched subtree must not
     re-run the eager group-count job: the second _curve_set_partitions
@@ -554,8 +519,9 @@ def test_curve_set_partition_estimate_cached_per_plan(spark):
 def test_grouped_map_runner_concats_spanning_group_once():
     """A group spanning B batches must reach fn in ONE call built from a
     deferred list concat — not B re-concats of a growing buffer (the
-    O(B²) hot-group cliff).  Also pins boundary-exact group changes and
-    NaN keys (dropna=False)."""
+    O(B²) hot-group cliff).  Also pins boundary-exact group changes, NaN
+    keys (dropna=False), the key tuple fn receives, groups that yield
+    no rows, and one output frame per input batch at most."""
     import math
 
     import pandas as pd
@@ -564,26 +530,63 @@ def test_grouped_map_runner_concats_spanning_group_once():
 
     calls = []
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        calls.append((pdf["k"].iloc[0], len(pdf)))
-        return pd.DataFrame({"k": [pdf["k"].iloc[0]], "n": [len(pdf)]})
+    def fn(key, pdf: pd.DataFrame):
+        k = pdf["k"].iloc[0]
+        assert len(key) == 1 and (key[0] == k or (math.isnan(k) and math.isnan(key[0])))
+        calls.append((k, len(pdf)))
+        if k == 4.0:
+            return None  # a group that yields no rows
+        return {"k": [k], "n": [len(pdf)]}
 
     # batches: group 1 spans 3 batches; group 2 ends exactly at a batch
-    # boundary; NaN group spans the last two batches
+    # boundary; NaN group spans the last two batches; group 4 yields
+    # nothing
     def b(ks):
         return pd.DataFrame({"k": ks, "v": range(len(ks))})
 
     batches = [
         b([1.0, 1.0]), b([1.0]), b([1.0, 2.0]),
-        b([2.0]), b([3.0, float("nan")]), b([float("nan")]),
+        b([2.0]), b([3.0, 4.0, float("nan")]), b([float("nan")]),
     ]
-    out = pd.concat(list(_make_runner(["k"], fn)(iter(batches))))
+    frames = list(_make_runner(["k"], fn)(iter(batches)))
+    assert all(isinstance(f, pd.DataFrame) and len(f) for f in frames)
+    assert len(frames) <= len(batches)
+    out = pd.concat(frames)
     got = {
         ("nan" if (isinstance(k, float) and math.isnan(k)) else k): n
         for k, n in zip(out["k"], out["n"])
     }
     assert got == {1.0: 4, 2.0: 2, 3.0: 1, "nan": 2}
-    assert len(calls) == 4  # exactly one fn call per group
+    assert len(out) == 4
+    assert len(calls) == 5  # exactly one fn call per group
+
+
+def test_grouped_map_runner_builds_one_frame_per_batch():
+    """Every group that ends in a batch lands in that batch's single
+    output frame, in group order, with multi-row groups intact."""
+    import pandas as pd
+
+    from dystonse_gtfs_data_spark.operators.grouped_map import _make_runner
+
+    def fn(key, pdf):
+        return {"k": [key[0]] * 2, "i": [0, 1], "n": [len(pdf)] * 2}
+
+    batches = [
+        pd.DataFrame({"k": [1, 1, 2, 3, 3, 4]}),
+        pd.DataFrame({"k": [4, 5, 6]}),
+    ]
+    frames = list(_make_runner(["k"], fn)(iter(batches)))
+    assert [f["k"].tolist() for f in frames] == [
+        [1, 1, 2, 2, 3, 3],
+        [4, 4, 5, 5],
+        [6, 6],
+    ]
+    assert [f["n"].tolist() for f in frames] == [
+        [2, 2, 1, 1, 2, 2],
+        [2, 2, 1, 1],
+        [1, 1],
+    ]
+    assert all(f["i"].tolist() == [0, 1] * (len(f) // 2) for f in frames)
 
 
 def test_grouped_map_carries_groups_across_arrow_batches(spark):
@@ -599,12 +602,8 @@ def test_grouped_map_carries_groups_across_arrow_batches(spark):
     rows = [(i % 5, i, float(i)) for i in range(40)]
     df = spark.createDataFrame(rows, "k int, i long, v double")
 
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"k": [int(pdf["k"].iloc[0])],
-             "n": [len(pdf)],
-             "s": [float(pdf["v"].sum())]}
-        )
+    def per_group(key, pdf: pd.DataFrame) -> dict:
+        return {"k": [int(key[0])], "n": [len(pdf)], "s": [float(pdf["v"].sum())]}
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
@@ -621,7 +620,8 @@ def test_grouped_map_carries_groups_across_arrow_batches(spark):
     want = {
         (r["k"], r["n"], r["s"])
         for r in df.groupBy("k").applyInPandas(
-            per_group, "k int, n long, s double"
+            lambda key, pdf: pd.DataFrame(per_group(key, pdf)),
+            "k int, n long, s double",
         ).collect()
     }
     assert got == want
