@@ -46,30 +46,32 @@ SLOT_IDS = [s[0] for s in TIME_SLOTS]  # the 11 non-DEFAULT slots
 
 
 def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
-    """Per-variant ECDFs keyed (route_type, section, slot, event): the
-    map side of the rollup (default_curves.rs:83-160)."""
+    """Per-variant ECDFs keyed (route_type, section, slot, event,
+    route_id, route_variant): the map side of the rollup
+    (default_curves.rs:83-160)."""
     r = enriched.join(
         F.broadcast(routes.select("route_id", "route_type")), "route_id"
     ).withColumn(
         "route_section", route_section(F.col("stop_index"), F.col("stop_count"))
     )
-    per_event = []
-    for et, delay_col, slot_col in (
-        (EVENT_ARRIVAL, "delay_arrival", "slot_arrival"),
-        (EVENT_DEPARTURE, "delay_departure", "slot_departure"),
-    ):
-        per_event.append(
-            r.filter(F.col(delay_col).isNotNull()).select(
-                "route_type",
-                "route_section",
-                F.col(slot_col).alias("time_slot_id"),
-                F.lit(et).alias("event_type"),
-                "route_id",
-                "route_variant",
-                F.col(delay_col).cast("double").alias("delay"),
-            )
-        )
-    stacked = per_event[0].unionByName(per_event[1])
+    stacked = r.select(
+        "route_type",
+        "route_section",
+        "route_id",
+        "route_variant",
+        F.inline(F.array(
+            F.struct(
+                F.col("slot_arrival").alias("time_slot_id"),
+                F.lit(EVENT_ARRIVAL).alias("event_type"),
+                F.col("delay_arrival").cast("double").alias("delay"),
+            ),
+            F.struct(
+                F.col("slot_departure").alias("time_slot_id"),
+                F.lit(EVENT_DEPARTURE).alias("event_type"),
+                F.col("delay_departure").cast("double").alias("delay"),
+            ),
+        )),
+    ).filter(F.col("delay").isNotNull())
 
     def build(key: tuple, pdf: pd.DataFrame) -> dict | None:
         values = pdf["delay"].to_numpy(dtype=float)
@@ -78,18 +80,21 @@ def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
         made = make_curve(values, None)
         if made is None:
             return None
-        route_type, section, slot, event_type = key[:4]
+        route_type, section, slot, event_type, route_id, route_variant = key
         return {
             "route_type": [int(route_type)],
             "route_section": [section],
             "time_slot_id": [int(slot)],
             "event_type": [int(event_type)],
+            "route_id": [route_id],
+            "route_variant": [route_variant],
             "curve": [curve_to_rows(simplify(made[0], 0.001))],
             "sample_size": [len(values)],
         }
 
     schema = (
         "route_type int, route_section string, time_slot_id int, event_type int, "
+        "route_id string, route_variant long, "
         "curve array<struct<x: float, y: float>>, sample_size int"
     )
     # batched grouped-map dispatch (see stop_pair_curve_sets): one
@@ -120,11 +125,10 @@ def _average(
     (``curves[i]`` is the parsed curve of member row ``i``) and the
     mean of their sample sizes, or None without a curve."""
     # float summation in average_curves is order-sensitive at the ulp
-    # level, so members are summed in _MEMBER_SORT_COLS order, as in the
-    # single-node oracle.  The variant curves carry only the grid keys of
-    # those columns, so within one level-1 cell members keep the order
-    # in which the shuffle delivered them (a stable sort).
-    members = members.sort_values([c for c in _MEMBER_SORT_COLS if c in members.columns])
+    # level, so members are summed in _MEMBER_SORT_COLS order (a total
+    # order: one variant curve per grid key and variant), as in the
+    # single-node oracle, whatever order the shuffle delivered them in
+    members = members.sort_values(_MEMBER_SORT_COLS)
     picked = []
     for i in members.index:
         c = curves[i]

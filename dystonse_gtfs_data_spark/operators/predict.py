@@ -141,8 +141,9 @@ def predict(
         F.col("sample_size").alias("s1_n"),
     )
     # the default-slot rung is the same grouped aggregate restricted to
-    # DEFAULT_SLOT (slot is a group key), so derive it by filter instead
-    # of running the collect_list aggregation a second time
+    # DEFAULT_SLOT.  Slot is a group key, so Catalyst pushes the filter
+    # below the aggregate: the plan runs the collect_list aggregation a
+    # second time, over the DEFAULT-slot curve rows only
     sets_default_slot = grouped.filter(
         F.col("time_slot_id") == DEFAULT_SLOT
     ).select(
@@ -323,33 +324,39 @@ def build_prediction_requests(
     rt = F.broadcast(routes.select("route_id", "route_type"))
     targets = targets.join(rt, "route_id")
 
-    per_event = []
-    for et, time_col in ((EVENT_ARRIVAL, "arrival_time"), (EVENT_DEPARTURE, "departure_time")):
-        event_dt = service_day_timestamp(F.col("trip_start_date"), F.col(time_col))
-        per_event.append(
-            targets.select(
-                "source",
-                "route_id",
-                "route_variant",
-                "route_type",
-                "trip_id",
-                "trip_start_date",
-                "trip_start_time",
-                "start_stop_index",
-                "end_stop_index",
-                F.col("target_stop_sequence").alias("stop_sequence"),
-                F.col("target_stop_id").alias("stop_id"),
-                "initial_delay",
-                "schedule_file_name",
-                F.lit(et).cast("int").alias("event_type"),
-                event_dt.alias("scheduled_time"),
-                time_slot_id(event_dt).alias("time_slot_id"),
-                route_section(F.col("end_stop_index"), F.col("stop_count")).alias(
-                    "route_section"
-                ),
-            )
-        )
-    return per_event[0].unionByName(per_event[1])
+    # one generator fans each target stop out to its arrival and
+    # departure requests
+    events = targets.select(
+        "*",
+        F.inline(F.array(
+            F.struct(F.lit(EVENT_ARRIVAL).alias("event_type"),
+                     F.col("arrival_time").alias("event_time")),
+            F.struct(F.lit(EVENT_DEPARTURE).alias("event_type"),
+                     F.col("departure_time").alias("event_time")),
+        )),
+    )
+    event_dt = service_day_timestamp(F.col("trip_start_date"), F.col("event_time"))
+    return events.select(
+        "source",
+        "route_id",
+        "route_variant",
+        "route_type",
+        "trip_id",
+        "trip_start_date",
+        "trip_start_time",
+        "start_stop_index",
+        "end_stop_index",
+        F.col("target_stop_sequence").alias("stop_sequence"),
+        F.col("target_stop_id").alias("stop_id"),
+        "initial_delay",
+        "schedule_file_name",
+        "event_type",
+        event_dt.alias("scheduled_time"),
+        time_slot_id(event_dt).alias("time_slot_id"),
+        route_section(F.col("end_stop_index"), F.col("stop_count")).alias(
+            "route_section"
+        ),
+    )
 
 
 def generate_realtime_predictions(

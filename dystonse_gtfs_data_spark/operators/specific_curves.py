@@ -169,18 +169,17 @@ def general_delay_curves(enriched: DataFrame) -> DataFrame:
     DEFAULT slot's (it iterates TIME_SLOTS_WITH_DEFAULT and inserts
     unconditionally, src/analyser/specific_curves.rs:276-369), so the
     net semantics are slot-independent — implemented directly."""
-    per_event = []
-    for et, delay_col in ((EVENT_ARRIVAL, "delay_arrival"), (EVENT_DEPARTURE, "delay_departure")):
-        per_event.append(
-            enriched.filter(F.col(delay_col).isNotNull()).select(
-                "route_id",
-                "route_variant",
-                "stop_index",
-                F.lit(et).alias("event_type"),
-                F.col(delay_col).alias("delay"),
-            )
-        )
-    stacked = per_event[0].unionByName(per_event[1])
+    stacked = enriched.select(
+        "route_id",
+        "route_variant",
+        "stop_index",
+        F.inline(F.array(
+            F.struct(F.lit(EVENT_ARRIVAL).alias("event_type"),
+                     F.col("delay_arrival").alias("delay")),
+            F.struct(F.lit(EVENT_DEPARTURE).alias("event_type"),
+                     F.col("delay_departure").alias("delay")),
+        )),
+    ).filter(F.col("delay").isNotNull())
     # batched grouped-map dispatch (see stop_pair_curve_sets): the
     # per-group math is a plain sorted ECDF, order-insensitive
     # (make_curve np.sorts internally), so no order_cols needed
@@ -230,94 +229,8 @@ _CURVE_SET_SCHEMA = (
 
 DEFAULT_SLOT = 12
 
-#: Groups-aware sizing of the curve-set grouped-map stage.  The
-#: W=100@R=100 width rehearsal (BENCH_gtfs_scaled.json) found the
-#: binding constraint is per-task AGGREGATION STATE (groups × pair
-#: lists), not shuffle bytes: inheriting the session's shuffle
-#: partitions put ~60 k groups in one hash-agg task and hit a JVM
-#: memory cliff at the default heap, while 256 partitions (~7.5 k
-#: groups/task) ran clean.  AQE cannot fix this — it coalesces by
-#: BYTES, and curve state is byte-small/state-heavy (the round-7
-#: defect class) — so the operator derives an explicit partition
-#: count from a group-count estimate instead of a manual knob.
-#: ~8 k groups/task reproduces the proven-clean manual point (256
-#: partitions over 1.93 M groups ≈ 7.5 k/task ran green at 8 g) with a
-#: ~7× margin under the measured ~60 k/task cliff; the first cut at
-#: 4 k/task was green too but paid ~31% in per-task overhead (491.8 s
-#: vs 374.6 s hand-tuned at W=100@R=100).
-_CURVE_SET_GROUPS_PER_TASK = 8192
-_CURVE_SET_MAX_PARTITIONS = 65536
 
-
-#: Estimate cache keyed on (Spark application id, plan semanticHash):
-#: the same enriched subtree asked for twice — the catalog query
-#: re-built per run, a test loop — pays the eager
-#: group-count job ONCE per session instead of once per construction
-#: (round-10 verdict task: default construction should stop running a
-#: Spark job per build).  semanticHash canonicalizes the analyzed
-#: plan, so two structurally-identical builds over the same source hit;
-#: the application id guards against hash reuse across restarted
-#: sessions reading different data at the same path.
-_PARTITION_ESTIMATE_CACHE: dict[tuple[str, int], int] = {}
-_PARTITION_ESTIMATE_CACHE_MAX = 256
-
-
-def _curve_set_partitions(enriched: DataFrame) -> int:
-    """Estimate the (variant × pair × slot × event) group count from a
-    slim per-variant aggregate of ``enriched`` (one extra
-    map-side-combined pass over the already-built subtree: W_v distinct
-    stops → W_v(W_v−1)/2 pairs, ×2 event types, ×(distinct slots + 1
-    default) — an upper-bound estimate, and overestimating costs only
-    near-empty tasks), then size the explicit repartition so each task
-    holds ~_CURVE_SET_GROUPS_PER_TASK groups.  Memoized per
-    (application, plan) — see _PARTITION_ESTIMATE_CACHE."""
-    cache_key: tuple[str, int] | None
-    try:
-        cache_key = (
-            enriched.sparkSession.sparkContext.applicationId,
-            enriched.semanticHash(),
-        )
-    except Exception:  # pragma: no cover - connect/remote sessions
-        cache_key = None
-    if cache_key is not None:
-        hit = _PARTITION_ESTIMATE_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-    row = (
-        enriched.groupBy("route_id", "route_variant")
-        .agg(
-            F.count_distinct(F.col("stop_index")).alias("w"),
-            F.count_distinct(F.col("slot_departure")).alias("s"),
-        )
-        .select(
-            F.sum(
-                F.col("w")
-                * (F.col("w") - 1)
-                * (F.col("s") + F.lit(1))  # matched slots + DEFAULT
-            ).alias("g")  # ×2 event types and ÷2 pair orientations cancel
-        )
-        .collect()[0]
-    )
-    est = int(row["g"] or 0)
-    floor = enriched.sparkSession.sparkContext.defaultParallelism
-    result = max(
-        floor,
-        min(
-            _CURVE_SET_MAX_PARTITIONS,
-            -(-est // _CURVE_SET_GROUPS_PER_TASK),
-        ),
-    )
-    if cache_key is not None:
-        if len(_PARTITION_ESTIMATE_CACHE) >= _PARTITION_ESTIMATE_CACHE_MAX:
-            _PARTITION_ESTIMATE_CACHE.clear()  # tiny int cache: reset > LRU
-        _PARTITION_ESTIMATE_CACHE[cache_key] = result
-    return result
-
-
-def stop_pair_curve_sets(
-    enriched: DataFrame,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def stop_pair_curve_sets(enriched: DataFrame) -> DataFrame:
     """A7/J4: the stop-pair self-join + curve-set build.
 
     Pair semantics (src/analyser/specific_curves.rs:279-351): join two
@@ -328,16 +241,9 @@ def stop_pair_curve_sets(
     pair belongs to a specific time slot only if BOTH endpoint datetimes
     match it, and always to the DEFAULT slot; > 20 pairs per group.
 
-    NOTE: with ``num_partitions=None`` (the default) BUILDING the
-    returned DataFrame runs one eager Spark job — the
-    :func:`_curve_set_partitions` group-count estimate over the
-    enriched subtree that sizes the curve-agg repartition — the FIRST
-    time a given subtree is seen; repeat constructions over the same
-    plan (re-built catalog queries, test loops) hit the
-    per-(application, semanticHash) estimate cache and run zero jobs.
-    Callers constructing plans without executing them (or who already
-    know the group count) can pass an explicit ``num_partitions`` to
-    keep even the first construction lazy.
+    The join runs once: one generator fans each joined row out to its
+    (event type × {matched slot, DEFAULT}) rows, and the rows whose
+    outcome delay or matched slot does not apply are filtered after it.
 
     Dispatch: the curve build runs through
     :func:`..operators.grouped_map.map_grouped_in_pandas` — one Python
@@ -363,9 +269,29 @@ def stop_pair_curve_sets(
         F.col("slot_arrival").alias("e_slot_arr"),
         F.col("slot_departure").alias("e_slot_dep"),
     )
+    t = CURVE_DELAY_BOUND
     paired = starts.join(ends, VEHICLE_KEY).filter(
-        F.col("start_stop_index") < F.col("end_stop_index")
+        (F.col("start_stop_index") < F.col("end_stop_index"))
+        & (F.col("d_start_raw") > -t) & (F.col("d_start_raw") < t)
     )
+
+    # (event type × {matched slot, DEFAULT}) arms of one joined row; a
+    # null matched slot (the endpoints' slots differ) drops its arm
+    arms = [
+        F.struct(
+            F.lit(et).alias("event_type"),
+            F.col(d_end).alias("d_end_raw"),
+            slot.alias("time_slot_id"),
+        )
+        for et, d_end, s_slot, e_slot in (
+            (EVENT_ARRIVAL, "d_end_arr", "s_slot_arr", "e_slot_arr"),
+            (EVENT_DEPARTURE, "d_end_dep", "s_slot_dep", "e_slot_dep"),
+        )
+        for slot in (
+            F.when(F.col(s_slot) == F.col(e_slot), F.col(s_slot)),
+            F.lit(DEFAULT_SLOT),
+        )
+    ]
 
     def rounded(col):
         d = col.cast("long")
@@ -373,59 +299,45 @@ def stop_pair_curve_sets(
             "float"
         )
 
-    t = CURVE_DELAY_BOUND
-    per_event = []
-    for et, d_end, e_slot, s_slot in (
-        (EVENT_ARRIVAL, "d_end_arr", "e_slot_arr", "s_slot_arr"),
-        (EVENT_DEPARTURE, "d_end_dep", "e_slot_dep", "s_slot_dep"),
-    ):
-        p = paired.filter(
-            F.col(d_end).isNotNull()
-            & (F.col("d_start_raw") > -t) & (F.col("d_start_raw") < t)
-            & (F.col(d_end) > -t) & (F.col(d_end) < t)
-        ).select(
+    all_pairs = (
+        paired.select(
+            "route_id", "route_variant", "start_stop_index", "end_stop_index",
+            "d_start_raw", F.inline(F.array(*arms)),
+        )
+        .filter(
+            F.col("time_slot_id").isNotNull()
+            & F.col("d_end_raw").isNotNull()
+            & (F.col("d_end_raw") > -t) & (F.col("d_end_raw") < t)
+        )
+        .select(
             "route_id",
             "route_variant",
             "start_stop_index",
             "end_stop_index",
-            F.lit(et).alias("event_type"),
+            "time_slot_id",
+            "event_type",
             rounded(F.col("d_start_raw")).alias("d_start"),
-            rounded(F.col(d_end)).alias("d_end"),
-            F.col(s_slot).alias("slot_start"),
-            F.col(e_slot).alias("slot_end"),
+            rounded(F.col("d_end_raw")).alias("d_end"),
         )
-        per_event.append(p)
-    pairs = per_event[0].unionByName(per_event[1])
-
-    slotted = pairs.filter(F.col("slot_start") == F.col("slot_end")).withColumn(
-        "time_slot_id", F.col("slot_start")
     )
-    default_slot = pairs.withColumn("time_slot_id", F.lit(DEFAULT_SLOT))
-    all_pairs = slotted.unionByName(default_slot).drop("slot_start", "slot_end")
 
     keys = [
         "route_id", "route_variant", "start_stop_index", "end_stop_index",
         "time_slot_id", "event_type",
     ]
-    # explicit hash repartition on the group keys: puts each group in
-    # one partition, is exempt from AQE byte-coalescing, and its count
-    # comes from the group estimate — see _curve_set_partitions
-    n_parts = (
-        num_partitions
-        if num_partitions is not None
-        else _curve_set_partitions(enriched)
-    )
     from .grouped_map import map_grouped_in_pandas
 
-    # (d_start, d_end) in the partition sort: build_curve_set's pair
-    # order is then deterministic at the input (the UDF's own stable
-    # sort becomes a no-op pass over sorted data)
+    # explicit hash repartition on the group keys at defaultParallelism,
+    # as predict sizes its curve tail: every group in one partition, and
+    # exempt from AQE byte-coalescing.  (d_start, d_end) in the partition
+    # sort makes build_curve_set's pair order deterministic at the input
+    # (the UDF's own lexsort becomes a no-op pass over sorted data)
     return map_grouped_in_pandas(
         all_pairs,
         keys,
         _curve_set_udf,
         _CURVE_SET_SCHEMA,
-        num_partitions=n_parts,
+        num_partitions=enriched.sparkSession.sparkContext.defaultParallelism,
         order_cols=("d_start", "d_end"),
     )
 

@@ -56,3 +56,24 @@ def test_default_statistics_matches_oracle_and_caches_nothing(spark):
     assert {v[0] for v in got.values()} == {
         PRECISION_GENERAL, PRECISION_FALLBACK_GENERAL, PRECISION_SUPER_GENERAL,
     }
+
+
+def test_rollup_is_independent_of_variant_curve_order(spark):
+    """The rollup sums each cell's member curves in (grid key, route_id,
+    route_variant) order, so the order in which the shuffle delivers the
+    variant curves cannot move a knot.  Three jittered replicas put three
+    members in a level-1 cell, where float summation order shows."""
+    from dystonse_gtfs_data_spark.operators.default_curves import (
+        _rollup,
+        variant_section_curves,
+    )
+
+    sched, recs = demo.scale_fixture(spark, 3)
+    enriched = enrich_records(recs, stop_indexed(sched["stop_times"]))
+    curves = variant_section_curves(enriched, sched["routes"]).toPandas()
+
+    assert {"route_id", "route_variant"} <= set(curves.columns)
+    assert curves.groupby(list(KEY)).size().max() > 1
+    want = _rollup(curves)
+    for seed in range(5):
+        assert _rollup(curves.sample(frac=1, random_state=seed)).equals(want)

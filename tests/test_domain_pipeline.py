@@ -455,65 +455,26 @@ class TestWideFixture:
         assert {r["n"] for r in per_variant} == {36}
 
 
-def test_curve_set_partition_estimate_scales_with_groups(spark):
-    # the W=100@R=100 cliff guard: the estimator must grow the explicit
-    # partition count once the (variant x pair x slot x event) estimate
-    # passes the per-task budget, and floor at defaultParallelism below
-    from dystonse_gtfs_data_spark.operators.specific_curves import (
-        _CURVE_SET_GROUPS_PER_TASK,
-        _curve_set_partitions,
-    )
-    from pyspark.sql import functions as F
-
-    floor = spark.sparkContext.defaultParallelism
-    # tiny shape: one variant, 4 stops, 1 slot -> est ~ 4*3*2 = 24
-    rows = [("r1", 1, i, 3) for i in range(4)]
-    small = spark.createDataFrame(
-        rows,
-        "route_id string, route_variant long, stop_index int, slot_departure int",
-    )
-    assert _curve_set_partitions(small) == floor
-    # wide shape: 300 variants x 60 stops x 4 slots
-    # est = 300 * 60*59 * 5 = 5.31M -> ceil(est/budget) partitions
-    wide = (
-        spark.range(0, 300)
-        .select(
-            F.concat(F.lit("r"), F.col("id")).alias("route_id"),
-            F.col("id").alias("route_variant"),
-        )
-        .crossJoin(spark.range(0, 60).select(F.col("id").cast("int").alias("stop_index")))
-        .withColumn("slot_departure", (F.col("stop_index") % 4).cast("int"))
-    )
-    est = 300 * 60 * 59 * 5
-    expected = max(floor, -(-est // _CURVE_SET_GROUPS_PER_TASK))
-    assert _curve_set_partitions(wide) == expected
-
-
-def test_curve_set_partition_estimate_cached_per_plan(spark):
-    """Repeat construction over the same enriched subtree must not
-    re-run the eager group-count job: the second _curve_set_partitions
-    call returns straight from the (application, semanticHash) cache.
-    Proven by poisoning the cached value and observing it come back."""
-    from dystonse_gtfs_data_spark.operators import specific_curves as sc
+def test_specific_statistics_construction_runs_no_job(spark, tmp_path):
+    """Building the specific-statistics plan submits no Spark job: the
+    curve-set repartition is sized without looking at the data.  The
+    input is a freshly written table, a plan no earlier build has seen."""
     from dystonse_gtfs_data_spark.sources.demo import scale_fixture
 
-    sched, recs = scale_fixture(spark, 1, jitter=False)
-    sti = sc.stop_indexed(sched["stop_times"])
-    enriched = sc.enrich_records(
-        sc.project_missing_delays(recs, sti), sti
-    )
-    sc._PARTITION_ESTIMATE_CACHE.clear()
-    first = sc._curve_set_partitions(enriched)
-    assert len(sc._PARTITION_ESTIMATE_CACHE) == 1
-    (key,) = sc._PARTITION_ESTIMATE_CACHE
-    sc._PARTITION_ESTIMATE_CACHE[key] = first + 7  # sentinel
-    assert sc._curve_set_partitions(enriched) == first + 7  # cache hit
-    # a structurally different subtree misses (different semanticHash)
-    other = enriched.filter("stop_index >= 0")
-    assert sc._curve_set_partitions(other) != first + 7 or len(
-        sc._PARTITION_ESTIMATE_CACHE
-    ) == 2
-    sc._PARTITION_ESTIMATE_CACHE.clear()
+    sched, recs = scale_fixture(spark, 2, jitter=False)
+    recs.write.parquet(str(tmp_path / "records"))
+    sched["stop_times"].write.parquet(str(tmp_path / "stop_times"))
+    records = spark.read.parquet(str(tmp_path / "records"))
+    stop_times = spark.read.parquet(str(tmp_path / "stop_times"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("specific-build", "specific_statistics construction")
+    try:
+        stats = specific_statistics(records, stop_times)
+        assert sc.statusTracker().getJobIdsForGroup("specific-build") == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert stats.filter(F.col("scope") == "specific").limit(1).count() == 1
 
 
 def test_grouped_map_runner_concats_spanning_group_once():

@@ -193,6 +193,32 @@ def test_enrich_records_broadcast_is_size_guarded(spark, monkeypatch, tmp_path):
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
 
 
+def test_stop_pair_join_runs_once_in_specific_statistics(spark):
+    # the stop-pair self-join (starts x ends on the vehicle key) is the
+    # analyse pass's widest operator: its event-type and time-slot arms
+    # fan out after it, so the physical plan holds ONE copy of it, not
+    # one per (event type x {matched slot, DEFAULT}) union branch
+    import re
+
+    from dystonse_gtfs_data_spark.operators.specific_curves import (
+        VEHICLE_KEY,
+        specific_statistics,
+    )
+    from dystonse_gtfs_data_spark.sources.demo import build_records, build_schedule
+
+    sched = build_schedule(spark)
+    df = specific_statistics(build_records(spark), sched["stop_times"])
+    plan = formatted_plan(df)
+    join_keys = [
+        {k.split("#")[0] for k in m.group(1).split(", ")}
+        for m in re.finditer(r"^Left keys \[\d+\]: \[([^\]]*)\]", plan, re.M)
+    ]
+    pair_joins = [
+        k for k in join_keys if set(VEHICLE_KEY) <= k and "stop_sequence" not in k
+    ]
+    assert len(pair_joins) == 1, plan
+
+
 def test_gap_fill_is_window_not_cartesian(spark, sf_dir):
     # J6 gap projection: the vehicle x schedule grid is an equi-join on
     # trip_id and the backward fill is ONE window pass per vehicle —
