@@ -62,16 +62,6 @@ def curve_y_at_x(curve: pd.Series, x: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.DoubleType())
-def curve_min_x(curve: pd.Series) -> pd.Series:
-    return _eval_series(curve, pd.Series([0.0] * len(curve)), lambda c, _a: c.min_x())
-
-
-@F.pandas_udf(T.DoubleType())
-def curve_max_x(curve: pd.Series) -> pd.Series:
-    return _eval_series(curve, pd.Series([0.0] * len(curve)), lambda c, _a: c.max_x())
-
-
-@F.pandas_udf(T.DoubleType())
 def curve_transfer_probability(arrival: pd.Series, departure: pd.Series) -> pd.Series:
     """C14: probability that `departure` happens after `arrival`."""
     out = np.full(len(arrival), np.nan)

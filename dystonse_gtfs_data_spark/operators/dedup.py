@@ -58,21 +58,6 @@ def _base_hash_col(col, base_hash: str):
     raise ValueError(f"unknown base_hash {base_hash!r} (use 'xxhash64' or 'md5')")
 
 
-#: Inputs below this optimizer-estimated size skip the round-robin
-#: exchange.  Default 0 — i.e. spread whenever the scan can't fill the
-#: cluster — because a round-6 warm A/B at sf0.1/local[32] REFUTED the
-#: "the exchange is pure overhead on sub-MB inputs" hypothesis: with
-#: the spread skipped, ``ngram_jaccard_dedup`` ran 8.6 s vs 2.2 s and
-#: ``decontaminate`` 3.2 s vs 1.0 s on a 0.58 MB scan (digest CPU per
-#: byte is that extreme), and the 8-query regression cluster summed to
-#: 21.9 s skipped vs 13.3 s spread.  The knob stays
-#: (``spark.graft.spread.minBytes``) for genuinely light per-row work
-#: on engines/corpora where the crossover differs; at real scale any
-#: value is irrelevant — a 100 TB scan is past the upper passthrough.
-_SPREAD_MIN_BYTES_CONF = "spark.graft.spread.minBytes"
-_SPREAD_MIN_BYTES_DEFAULT = 0
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Per-row digest work (md5 of every shingle / k-gram) is CPU-bound;
     a small parquet input arrives as a single split and would pin ONE
@@ -83,24 +68,17 @@ def _spread(df: DataFrame) -> DataFrame:
     The small-input test rides the optimizer's ``sizeInBytes`` estimate
     (driver-side plan stats, no job): ``df.rdd.getNumPartitions()``
     would force a full physical-plan → RDD conversion per call just for
-    introspection.  Three regimes:
+    introspection.  Two regimes:
 
-    - size < ``spark.graft.spread.minBytes`` (default 0, i.e. never —
-      measured: even a 0.58 MB digest-heavy scan runs 4× faster spread
-      than single-core): pass through.
     - size < parallelism × maxPartitionBytes: round-robin repartition —
       the scan cannot fill every core on its own and the per-row CPU
-      dominates, so the exchange pays for itself (8-18× at sf1).
+      dominates, so the exchange pays for itself (8-18× at sf1; even a
+      0.58 MB digest-heavy scan runs 3-4× faster spread than on one
+      core).
     - larger: pass through — the file splits already exceed cluster
       parallelism and a corpus-wide shuffle would be pure cost."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        min_bytes = int(
-            spark.conf.get(_SPREAD_MIN_BYTES_CONF, str(_SPREAD_MIN_BYTES_DEFAULT))
-        )
-    except Exception:
-        min_bytes = _SPREAD_MIN_BYTES_DEFAULT
     try:
         max_pb = int(
             spark._jvm.org.apache.spark.util.Utils.byteStringAsBytes(  # noqa: SLF001
@@ -125,7 +103,7 @@ def _spread(df: DataFrame) -> DataFrame:
         except Exception:
             pass
         return df
-    if min_bytes <= size < target * max_pb:
+    if size < target * max_pb:
         return df.repartition(target)
     return df
 
@@ -532,7 +510,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 3,
     threshold: float = 0.8,
-    eager_checkpoint: bool = False,
 ) -> DataFrame:
     """Verify candidate pairs with exact shingle-set Jaccard similarity.
 
@@ -544,29 +521,17 @@ def ngram_jaccard_pairs(
     computed once and shared by the semi-join branch and the payload
     joins — and, unlike a localCheckpoint, stays RECOMPUTABLE from
     lineage if an executor (and its cached blocks) is lost mid-job.
-    ``eager_checkpoint=True`` opts into the old behavior (truncated
-    lineage, a build-time job, unreplicated blocks) for interactive
-    sessions that re-run the verify stage many times.
 
-    The persist is TRACKED (round 12): it used to be a bare
-    ``.persist()`` that nothing ever released, and Spark's CacheManager
-    matches cached plans by CANONICALIZED subtree — so in any session
-    that runs the same pipeline twice (the bench's volatile median-of-3
-    reps, the three CC-family catalog entries that all mine the same
-    md5 minhash pair graph, dedup_eval), the second construction
-    silently read the first's cache instead of computing from the
-    inputs (measured: identical fresh construction 7.8 s → 1.0 s with
-    3 InMemoryTableScans).  Registering it with the cache module means
-    the harness's ``release_persisted()`` between timed queries drops
-    the blocks AND the CacheManager entry, so every bench/oracle
-    invocation recomputes from parquet — per-entry numbers rise
-    honestly where they were riding a predecessor's cache."""
+    The persist is TRACKED: Spark's CacheManager matches cached plans
+    by CANONICALIZED subtree, so an untracked persist would silently
+    serve any later construction of the same pipeline in the session
+    (the three CC-family catalog entries all mine the same md5 minhash
+    pair graph).  Registering it with the cache module means
+    ``release_persisted()`` between queries drops the blocks AND the
+    CacheManager entry, so every query recomputes from its inputs."""
     from ..cache import tracked_persist
 
-    if eager_checkpoint:
-        candidates = candidates.localCheckpoint(eager=True)
-    else:
-        candidates = tracked_persist(candidates)
+    candidates = tracked_persist(candidates)
     cand_ids = candidates.select(
         F.explode(F.array("id_a", "id_b")).alias(id_col)
     ).distinct()

@@ -70,18 +70,6 @@ def _interpolate_set(curve_set: pd.Series, initial_delay: pd.Series) -> pd.Serie
     return pd.Series(out)
 
 
-@F.pandas_udf(CURVE_TYPE)
-def cap_curve_points(curve: pd.Series) -> pd.Series:
-    """Bound stored prediction-curve size (the reference's ≤120-byte cap,
-    src/importer/per_schedule_importer.rs:362) — escalating simplify
-    until ≤ 30 points."""
-    out = []
-    for rows in curve:
-        c = rows_to_curve(rows)
-        out.append(None if c is None else curve_to_rows(simplify_to_max_points(c, 30)))
-    return pd.Series(out)
-
-
 def _grouped_sets(statistics: DataFrame, slot: int | None = None) -> DataFrame:
     df = statistics.filter(F.col("scope") == "specific")
     if slot is not None:
@@ -375,46 +363,50 @@ def generate_realtime_predictions(
     requests = build_prediction_requests(
         realtime_bases(records), stop_times_idx, routes, trips
     )
-    predicted = predict(statistics, requests)
-    # cap + bounds + the null-curve drop in ONE mapInPandas pass.  The
-    # previous shape — filter(isNotNull) + withColumn(cap_curve_points)
-    # + curve_min_x/curve_max_x scalar UDFs — let projection collapse
-    # inline the cap call into BOTH bound UDFs' arguments AND made the
-    # filter re-derive the interpolate UDFs in a second Arrow stage:
-    # the executed plan ran cap_curve_points three times per row and
-    # _interpolate_set twice, and the R=100 scaled rehearsal measured
-    # that tail at ~112 s of the 121 s total (BENCH_gtfs_scaled.json).
-    # A mapInPandas node yields plain output ATTRIBUTES, which
-    # downstream expressions reference for free — structurally one
-    # Python evaluation, no barrier tricks; folding the null filter in
-    # removes the duplicated filter-side evaluation too.
-    fields = predicted.schema.fields
+    return finish_predictions(predict(statistics, requests), ORIGIN_REALTIME)
+
+
+def _cap_with_bounds(batches):
+    """Drop curves with fewer than two knots, cap the rest at 30 points
+    and append their x bounds as ``_min_x``/``_max_x``."""
+    for pdf in batches:
+        keep, capped, mns, mxs = [], [], [], []
+        for i, rows in enumerate(pdf["prediction_curve"]):
+            c = rows_to_curve(rows)
+            if c is None:
+                continue
+            c = simplify_to_max_points(c, 30)
+            keep.append(i)
+            capped.append(curve_to_rows(c))
+            mns.append(float(c.min_x()))
+            mxs.append(float(c.max_x()))
+        out = pdf.iloc[keep].copy()
+        out["prediction_curve"] = capped
+        out["_min_x"] = mns
+        out["_max_x"] = mxs
+        yield out
+
+
+def finish_predictions(predicted: DataFrame, origin_type: int) -> DataFrame:
+    """:func:`predict` output → PREDICTIONS-shaped rows of one origin.
+    The stored curve is capped at 30 points (the reference's ≤120-byte
+    cap, src/importer/per_schedule_importer.rs:362), and prediction_min/max
+    = scheduled event time + the capped curve's min/max x.
+
+    Cap, bounds and the drop of curves with fewer than two knots run in
+    ONE mapInPandas pass, whose outputs are plain ATTRIBUTES that
+    downstream expressions reference for free.  Separate scalar UDFs
+    over the curve get inlined into each other's arguments by
+    projection collapse (the cap then ran three times per row), and a
+    separate null filter re-derives ``_interpolate_set`` in a second
+    Arrow stage."""
     out_schema = T.StructType(
-        fields
+        predicted.schema.fields
         + [
             T.StructField("_min_x", T.DoubleType()),
             T.StructField("_max_x", T.DoubleType()),
         ]
     )
-
-    def _cap_with_bounds(batches):
-        for pdf in batches:
-            keep, capped, mns, mxs = [], [], [], []
-            for i, rows in enumerate(pdf["prediction_curve"]):
-                c = rows_to_curve(rows)
-                if c is None:
-                    continue  # the filter(isNotNull) of the old shape
-                c = simplify_to_max_points(c, 30)
-                keep.append(i)
-                capped.append(curve_to_rows(c))
-                mns.append(float(c.min_x()))
-                mxs.append(float(c.max_x()))
-            out = pdf.iloc[keep].copy()
-            out["prediction_curve"] = capped
-            out["_min_x"] = mns
-            out["_max_x"] = mxs
-            yield out
-
     finished = predicted.mapInPandas(_cap_with_bounds, out_schema)
     sched = F.col("scheduled_time").cast("double")
     return finished.select(
@@ -429,7 +421,7 @@ def generate_realtime_predictions(
         F.timestamp_seconds(sched + F.col("_min_x")).alias("prediction_min"),
         F.timestamp_seconds(sched + F.col("_max_x")).alias("prediction_max"),
         F.col("precision_type").cast("byte").alias("precision_type"),
-        F.lit(ORIGIN_REALTIME).cast("byte").alias("origin_type"),
+        F.lit(origin_type).cast("byte").alias("origin_type"),
         "sample_size",
         "prediction_curve",
         "schedule_file_name",

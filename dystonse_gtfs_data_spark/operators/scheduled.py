@@ -22,7 +22,7 @@ from ..functions.route import route_section
 from ..functions.time import service_day_timestamp, time_slot_id
 from ..schemas import EVENT_ARRIVAL, EVENT_DEPARTURE, ORIGIN_SCHEDULE
 from ..sources.tables import maybe_broadcast
-from .predict import predict
+from .predict import finish_predictions, predict
 from .specific_curves import stop_indexed
 
 _WEEKDAY_COLS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
@@ -100,8 +100,6 @@ def generate_scheduled_predictions(
     """Every (trip instance × stop × event) whose scheduled time falls in
     [window_begin, window_end) → no-basis prediction (SemiSpecific or the
     default ladder), origin Schedule."""
-    from ..curves.udfs import curve_max_x, curve_min_x
-
     sti = stop_indexed(stop_times)
     instances = active_trip_instances(trips, calendar, stop_times, window_begin, window_end)
     rt = F.broadcast(routes.select("route_id", "route_type"))
@@ -117,55 +115,40 @@ def generate_scheduled_predictions(
         "trip_id",
     ).join(rt, "route_id")
 
-    per_event = []
-    for et, tcol in ((EVENT_ARRIVAL, "arrival_time"), (EVENT_DEPARTURE, "departure_time")):
-        event_dt = service_day_timestamp(F.col("trip_start_date"), F.col(tcol))
-        per_event.append(
-            targets.withColumn("scheduled_time", event_dt)
-            .filter(
-                (F.col("scheduled_time") >= F.lit(window_begin))
-                & (F.col("scheduled_time") < F.lit(window_end))
-            )
-            .select(
-                "route_id",
-                "route_variant",
-                "route_type",
-                "trip_id",
-                "trip_start_date",
-                "trip_start_time",
-                "stop_sequence",
-                "stop_id",
-                F.lit(None).cast("int").alias("start_stop_index"),
-                F.col("stop_index").alias("end_stop_index"),
-                F.lit(None).cast("double").alias("initial_delay"),
-                F.lit(et).cast("int").alias("event_type"),
-                "scheduled_time",
-                time_slot_id(F.col("scheduled_time")).alias("time_slot_id"),
-                route_section(F.col("stop_index"), F.col("stop_count")).alias("route_section"),
-            )
-        )
-    requests = per_event[0].unionByName(per_event[1])
-    from .predict import cap_curve_points
-
-    predicted = predict(statistics, requests).filter(F.col("prediction_curve").isNotNull())
-    predicted = predicted.withColumn(
-        "prediction_curve", cap_curve_points(F.col("prediction_curve"))
+    # one generator fans each target stop out to its arrival and
+    # departure events, as build_prediction_requests does
+    events = targets.select(
+        "*",
+        F.inline(F.array(
+            F.struct(F.lit(EVENT_ARRIVAL).alias("event_type"),
+                     F.col("arrival_time").alias("event_time")),
+            F.struct(F.lit(EVENT_DEPARTURE).alias("event_type"),
+                     F.col("departure_time").alias("event_time")),
+        )),
+    ).withColumn(
+        "scheduled_time",
+        service_day_timestamp(F.col("trip_start_date"), F.col("event_time")),
     )
-    sched = F.col("scheduled_time").cast("double")
-    return predicted.select(
+    requests = events.filter(
+        (F.col("scheduled_time") >= F.lit(window_begin))
+        & (F.col("scheduled_time") < F.lit(window_end))
+    ).select(
         F.lit(source).alias("source"),
-        F.col("event_type").cast("byte").alias("event_type"),
-        "stop_id",
-        "stop_sequence",
         "route_id",
+        "route_variant",
+        "route_type",
         "trip_id",
         "trip_start_date",
         "trip_start_time",
-        F.timestamp_seconds(sched + curve_min_x(F.col("prediction_curve"))).alias("prediction_min"),
-        F.timestamp_seconds(sched + curve_max_x(F.col("prediction_curve"))).alias("prediction_max"),
-        F.col("precision_type").cast("byte").alias("precision_type"),
-        F.lit(ORIGIN_SCHEDULE).cast("byte").alias("origin_type"),
-        "sample_size",
-        "prediction_curve",
-        F.lit(schedule_file_name).alias("schedule_file_name"),
+        "stop_sequence",
+        "stop_id",
+        F.lit(None).cast("int").alias("start_stop_index"),
+        F.col("stop_index").alias("end_stop_index"),
+        F.lit(None).cast("double").alias("initial_delay"),
+        "event_type",
+        "scheduled_time",
+        time_slot_id(F.col("scheduled_time")).alias("time_slot_id"),
+        route_section(F.col("stop_index"), F.col("stop_count")).alias("route_section"),
+        F.lit(schedule_file_name).cast("string").alias("schedule_file_name"),
     )
+    return finish_predictions(predict(statistics, requests), ORIGIN_SCHEDULE)

@@ -51,32 +51,29 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# memo for the demo statistics table: four catalog queries need it and the
-# build (curve UDAFs over the fixture) dominates their runtime — build once
-# per SparkSession and persist
-_DEMO_STATS_CACHE: dict[int, DataFrame] = {}
-
 
 def demo_statistics(spark: SparkSession) -> DataFrame:
-    key = id(spark._jsparkSession)  # noqa: SLF001
-    if key not in _DEMO_STATS_CACHE:
-        from .operators.default_curves import default_statistics
-        from .operators.specific_curves import (
-            enrich_records,
-            specific_statistics,
-            stop_indexed,
-        )
-        from .sources.demo import build_records as demo_records
-        from .sources.demo import build_schedule
+    """The demo feed's specific + default statistics table.  The curve
+    build dominates the entries that read it, so it is persisted; the
+    persist is tracked, and ``release_persisted()`` between queries
+    drops it, so no query reads another's cache."""
+    from .cache import tracked_persist
+    from .operators.default_curves import default_statistics
+    from .operators.specific_curves import (
+        enrich_records,
+        specific_statistics,
+        stop_indexed,
+    )
+    from .sources.demo import build_records as demo_records
+    from .sources.demo import build_schedule
 
-        sched = build_schedule(spark)
-        records = demo_records(spark)
-        sti = stop_indexed(sched["stop_times"])
-        stats = specific_statistics(records, sched["stop_times"]).unionByName(
-            default_statistics(enrich_records(records, sti), sched["routes"])
-        )
-        _DEMO_STATS_CACHE[key] = stats.persist()
-    return _DEMO_STATS_CACHE[key]
+    sched = build_schedule(spark)
+    records = demo_records(spark)
+    sti = stop_indexed(sched["stop_times"])
+    stats = specific_statistics(records, sched["stop_times"]).unionByName(
+        default_statistics(enrich_records(records, sti), sched["routes"])
+    )
+    return tracked_persist(stats)
 
 
 def register(name: str, oracle: str | None, covers: str = ""):
@@ -6914,9 +6911,7 @@ _SND_HITS_SQL = f"""
     "checked against the exact batch twin (id-ordered replay makes "
     "'first seen' == 'min id')",
 )
-def q_stream_near_dup(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None | str = "auto"
-) -> DataFrame:
+def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import tempfile as _tf
     import uuid as _uuid
@@ -6958,8 +6953,7 @@ def q_stream_near_dup(
         rowwise_minhash_bands(
             src.repartition(spark.sparkContext.defaultParallelism),
             num_hashes=16,
-        ),
-        n_buckets=n_buckets,
+        )
     )
     sink = f"streamneardup_{_uuid.uuid4().hex[:8]}"
     with catalog_stream_state(spark, 8):
@@ -7014,9 +7008,7 @@ _SND_TTL_OFFSET = 1_000_000
     "(parquet sink), the corpus re-presented under shifted ids after "
     "the TTL lapsed, hash-checked against the per-epoch batch twin",
 )
-def q_stream_near_dup_ttl(
-    spark: SparkSession, sf_dir: str, n_buckets: int | None | str = "auto"
-) -> DataFrame:
+def q_stream_near_dup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import tempfile as _tf
     import time as _time
@@ -7054,7 +7046,7 @@ def q_stream_near_dup_ttl(
         )
         with catalog_stream_state(spark, 8):
             q = (
-                streaming_near_dup(sig, ttl_ms=ttl_ms, n_buckets=n_buckets)
+                streaming_near_dup(sig, ttl_ms=ttl_ms)
                 .writeStream.format("parquet")
                 .outputMode("append")
                 .option("path", out_dir)

@@ -50,12 +50,11 @@ def state_buckets(expected_keys: int) -> int:
     return min(b, 1 << 20)
 
 
-def _resolve_buckets(n_buckets, expected_keys) -> int | None:
+def _resolve_buckets(n_buckets: int | str, expected_keys) -> int:
     """Shared ``n_buckets="auto"`` resolution for the bucketed stateful
-    operators: explicit int/None pass through (None = per-key keying,
-    the A/B leg); "auto" derives from ``expected_keys`` via
-    :func:`state_buckets`, anchored at :data:`DEFAULT_EXPECTED_KEYS`
-    when the caller has no estimate."""
+    operators: an explicit int passes through; "auto" derives from
+    ``expected_keys`` via :func:`state_buckets`, anchored at
+    :data:`DEFAULT_EXPECTED_KEYS` when the caller has no estimate."""
     if n_buckets == "auto":
         return state_buckets(
             DEFAULT_EXPECTED_KEYS if expected_keys is None else expected_keys
@@ -94,8 +93,11 @@ _BASIS_OUTPUT_SCHEMA = (
 
 
 def _make_basis_fn(ttl_ms: int | None):
-    """Closure factory (Python lambda default-args break HOF arity
-    elsewhere; here it just keeps ``ttl_ms`` out of the state row)."""
+    """Per-vehicle reference form of the basis state function, keyed by
+    the vehicle key itself with :data:`_BASIS_STATE_SCHEMA` state.  No
+    engine path runs it: :func:`stateful_basis_stream` runs the
+    bucketed :func:`_make_basis_bucket_fn`, and the tests check that
+    the two emit the same rows."""
 
     def _basis_fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -277,7 +279,7 @@ def _make_basis_bucket_fn(ttl_ms: int | None):
 def stateful_basis_stream(
     updates: DataFrame,
     ttl_ms: int | None = None,
-    n_buckets: int | None | str = "auto",
+    n_buckets: int | str = "auto",
     expected_vehicles: int | None = None,
 ) -> DataFrame:
     """updates: streaming RT_UPDATES-shaped frame (trip_id, start_date,
@@ -287,43 +289,20 @@ def stateful_basis_stream(
 
     ``n_buckets="auto"`` keys the state by a hash bucket of the vehicle
     key with the bucket's bases packed into one state row —
-    output-identical to per-vehicle keying (``n_buckets=None``, kept
-    for A/B) but the per-key pandas invocation cost stops scaling with
+    output-identical to per-vehicle keying (:func:`_make_basis_fn`),
+    but the per-key pandas invocation cost stops scaling with
     the fleet (measured 0.6 ms/vehicle/batch of pure overhead at 30 k
     synthetic vehicles; see _make_basis_bucket_fn).  The bucket count
     derives from ``expected_vehicles`` by the √keys rule
     (:func:`state_buckets`; 1024 at the default anchor) — pass the
     fleet size for a right-sized store, or an explicit int to pin."""
     n_buckets = _resolve_buckets(n_buckets, expected_vehicles)
-    keyed = updates.select(
-        "trip_id",
-        F.col("start_date").alias("trip_start_date"),
-        F.coalesce(
-            F.split(F.col("start_time"), ":").getItem(0).cast("int") * 3600
-            + F.split(F.col("start_time"), ":").getItem(1).cast("int") * 60
-            + F.split(F.col("start_time"), ":").getItem(2).cast("int"),
-            F.lit(0),
-        ).alias("trip_start_time"),
-        "stop_sequence",
-        "departure_delay",
-        F.col("header_timestamp").alias("time_of_recording"),
-    ).withColumnRenamed("departure_delay", "delay_departure")
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if ttl_ms
         else GroupStateTimeout.NoTimeout
     )
-    if n_buckets is None:
-        return keyed.groupBy(
-            "trip_id", "trip_start_date", "trip_start_time"
-        ).applyInPandasWithState(
-            _make_basis_fn(ttl_ms),
-            outputStructType=_BASIS_OUTPUT_SCHEMA,
-            stateStructType=_BASIS_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout,
-        )
-    bucketed = keyed.withColumn(
+    bucketed = _basis_keyed(updates).withColumn(
         "_bucket",
         F.pmod(
             F.xxhash64("trip_id", "trip_start_date", "trip_start_time"),
@@ -337,6 +316,25 @@ def stateful_basis_stream(
         outputMode="append",
         timeoutConf=timeout,
     )
+
+
+def _basis_keyed(updates: DataFrame) -> DataFrame:
+    """Project RT_UPDATES rows onto the basis state's input columns:
+    the vehicle key (``start_time`` parsed to seconds) plus the
+    observation."""
+    return updates.select(
+        "trip_id",
+        F.col("start_date").alias("trip_start_date"),
+        F.coalesce(
+            F.split(F.col("start_time"), ":").getItem(0).cast("int") * 3600
+            + F.split(F.col("start_time"), ":").getItem(1).cast("int") * 60
+            + F.split(F.col("start_time"), ":").getItem(2).cast("int"),
+            F.lit(0),
+        ).alias("trip_start_time"),
+        "stop_sequence",
+        "departure_delay",
+        F.col("header_timestamp").alias("time_of_recording"),
+    ).withColumnRenamed("departure_delay", "delay_departure")
 
 
 _NEARDUP_STATE_SCHEMA = "first_id long, last_seen_ms long"
@@ -413,6 +411,12 @@ def _make_near_dup_bucket_fn(ttl_ms: int | None):
 
 
 def _make_near_dup_fn(ttl_ms: int | None):
+    """Per-signature reference form of the near-dup state function,
+    keyed by (band_id, band_sig) with :data:`_NEARDUP_STATE_SCHEMA`
+    state.  No engine path runs it: :func:`streaming_near_dup` runs the
+    bucketed :func:`_make_near_dup_bucket_fn`, and the tests check that
+    the two emit the same rows."""
+
     def _near_dup_fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -466,7 +470,7 @@ def _make_near_dup_fn(ttl_ms: int | None):
 def streaming_near_dup(
     bands: DataFrame,
     ttl_ms: int | None = None,
-    n_buckets: int | None | str = "auto",
+    n_buckets: int | str = "auto",
     expected_signatures: int | None = None,
 ) -> DataFrame:
     """Streaming minhash near-dup detection (the incremental form of the
@@ -479,7 +483,7 @@ def streaming_near_dup(
     ``n_buckets="auto"`` keys the state by a hash BUCKET of the
     signature, with each bucket's index packed into one state row as
     parallel arrays.  Output-identical to per-signature keying
-    (``n_buckets=None``, kept for A/B), but the Python stateful
+    (:func:`_make_near_dup_fn`), but the Python stateful
     operator's per-key invocation cost stops scaling with the corpus: a
     round-9 sf10 profile showed per-signature keying paying for ~2 M
     pandas state calls per micro-batch while the dedup math itself was
@@ -512,14 +516,6 @@ def streaming_near_dup(
         if ttl_ms
         else GroupStateTimeout.NoTimeout
     )
-    if n_buckets is None:
-        return bands.groupBy("band_id", "band_sig").applyInPandasWithState(
-            _make_near_dup_fn(ttl_ms),
-            outputStructType=_NEARDUP_OUTPUT_SCHEMA,
-            stateStructType=_NEARDUP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=timeout,
-        )
     bucketed = bands.withColumn(
         "_bucket",
         F.pmod(F.xxhash64("band_id", "band_sig"), F.lit(n_buckets)),

@@ -45,7 +45,22 @@ def test_bigram_c2_persist_is_tracked_and_released(spark, sf_dir):
     # tracked, so release_persisted() reports >= 1 released frame.
     try:
         out = REGISTRY["bigram_lm_score"].fn(spark, sf_dir)
-        assert out.limit(5).count() >= 0  # materialize the c2 cache
+        assert out.limit(5).count() > 0  # materialize the c2 cache
     finally:
         n = cache.release_persisted()
     assert n >= 1
+
+
+def test_demo_statistics_persist_is_tracked_and_released(spark, sf_dir):
+    # demo_statistics persists the demo feed's statistics table for the
+    # entries that read it.  The persist must be tracked: after
+    # release_persisted() the CacheManager holds nothing, so no later
+    # query can read this one's cache through a matching subtree.
+    from dystonse_gtfs_data_spark.queries import REGISTRY
+
+    try:
+        out = REGISTRY["gtfs_predictions"].fn(spark, sf_dir)
+        assert out.count() > 0
+    finally:
+        cache.release_persisted()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001

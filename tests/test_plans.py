@@ -620,22 +620,13 @@ def test_curation_funnel_composition_is_clean(spark, sf_dir):
         release_persisted()
 
 
-def test_spread_min_bytes_knob(spark, sf_dir):
-    # Default (0): a one-split sub-MB scan IS round-robin spread — the
-    # round-6 warm A/B measured digest CPU dominating even at 0.58 MB
-    # (ngram_jaccard 8.6 s single-core vs 2.2 s spread at sf0.1).  With
-    # spark.graft.spread.minBytes raised past the input size, the same
-    # scan passes through unshuffled (the knob for light per-row work).
+def test_small_scan_is_round_robin_spread(spark, sf_dir):
+    # A one-split sub-MB scan IS round-robin spread: digest CPU
+    # dominates even at 0.58 MB (ngram_jaccard 8.6 s single-core vs
+    # 2.2 s spread at sf0.1).
     from dystonse_gtfs_data_spark.operators.dedup import _spread
     from dystonse_gtfs_data_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    try:
-        spread_plan = _spread(docs)._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-        assert "RoundRobinPartitioning" in spread_plan
-
-        spark.conf.set("spark.graft.spread.minBytes", str(1 << 40))
-        skip_plan = _spread(docs)._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-        assert "RoundRobinPartitioning" not in skip_plan
-    finally:
-        spark.conf.unset("spark.graft.spread.minBytes")
+    spread_plan = _spread(docs)._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "RoundRobinPartitioning" in spread_plan

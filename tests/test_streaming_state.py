@@ -565,16 +565,22 @@ class TestRocksDBStateStore:
 
 
 def test_bucketed_near_dup_matches_per_signature_keying(spark, tmp_path):
-    # round-9 bucketed-state keying (n_buckets) must be OUTPUT-IDENTICAL
-    # to the per-signature form (n_buckets=None) — same hits, same
-    # dup_of attribution, across a multi-batch replay with duplicate
-    # groups spanning batches
+    # bucketed-state keying must be OUTPUT-IDENTICAL to the
+    # per-signature reference keying (_make_near_dup_fn, which no engine
+    # API selects, so the query is built here) — same hits, same dup_of
+    # attribution, across a multi-batch replay with duplicate groups
+    # spanning batches
     import random
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from dystonse_gtfs_data_spark.operators.dedup import (
         rowwise_minhash_bands,
     )
     from dystonse_gtfs_data_spark.streaming.aggregations import (
+        _NEARDUP_OUTPUT_SCHEMA,
+        _NEARDUP_STATE_SCHEMA,
+        _make_near_dup_fn,
         streaming_near_dup,
     )
 
@@ -600,7 +606,16 @@ def test_bucketed_near_dup_matches_per_signature_keying(spark, tmp_path):
             for n in names:
                 _os.utime(_os.path.join(root, n), (1_000_000 + b,) * 2)
 
-    def run(n_buckets, tag):
+    def per_signature(bands):
+        return bands.groupBy("band_id", "band_sig").applyInPandasWithState(
+            _make_near_dup_fn(None),
+            outputStructType=_NEARDUP_OUTPUT_SCHEMA,
+            stateStructType=_NEARDUP_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    def run(stateful, tag):
         src = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
@@ -608,10 +623,7 @@ def test_bucketed_near_dup_matches_per_signature_keying(spark, tmp_path):
         )
         out = str(tmp_path / f"out_{tag}")
         q = (
-            streaming_near_dup(
-                rowwise_minhash_bands(src, num_hashes=16),
-                n_buckets=n_buckets,
-            )
+            stateful(rowwise_minhash_bands(src, num_hashes=16))
             .writeStream.format("parquet")
             .outputMode("append")
             .option("path", out)
@@ -625,20 +637,28 @@ def test_bucketed_near_dup_matches_per_signature_keying(spark, tmp_path):
             for r in spark.read.parquet(out).collect()
         }
 
-    bucketed = run(16, "bucketed")  # small bucket count → real packing
-    persig = run(None, "persig")
+    # small bucket count → real packing
+    bucketed = run(lambda b: streaming_near_dup(b, n_buckets=16), "bucketed")
+    persig = run(per_signature, "persig")
     assert bucketed == persig
     assert bucketed  # repeated texts must produce hits
 
 
 def test_bucketed_basis_matches_per_vehicle_keying(spark, tmp_path):
-    # bucketed basis state (round-9) must be OUTPUT-IDENTICAL to the
-    # per-vehicle keying: same emit-on-change rows, same latest-wins
-    # advance across micro-batches, including a late stale batch that
-    # must NOT clobber the newer basis
+    # bucketed basis state must be OUTPUT-IDENTICAL to the per-vehicle
+    # reference keying (_make_basis_fn, which no engine API selects, so
+    # the query is built here): same emit-on-change rows, same
+    # latest-wins advance across micro-batches, including a late stale
+    # batch that must NOT clobber the newer basis
     import os as _os
 
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
     from dystonse_gtfs_data_spark.streaming.aggregations import (
+        _BASIS_OUTPUT_SCHEMA,
+        _BASIS_STATE_SCHEMA,
+        _basis_keyed,
+        _make_basis_fn,
         stateful_basis_stream,
     )
 
@@ -665,7 +685,18 @@ def test_bucketed_basis_matches_per_vehicle_keying(spark, tmp_path):
             for n in names:
                 _os.utime(_os.path.join(root, n), (1_000_000 + i,) * 2)
 
-    def run(n_buckets, tag):
+    def per_vehicle(updates):
+        return _basis_keyed(updates).groupBy(
+            "trip_id", "trip_start_date", "trip_start_time"
+        ).applyInPandasWithState(
+            _make_basis_fn(None),
+            outputStructType=_BASIS_OUTPUT_SCHEMA,
+            stateStructType=_BASIS_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    def run(stateful, tag):
         src = (
             spark.readStream.schema(
                 spark.read.parquet(str(land / "b000")).schema
@@ -675,7 +706,7 @@ def test_bucketed_basis_matches_per_vehicle_keying(spark, tmp_path):
         )
         out_dir = str(tmp_path / f"out_{tag}")
         q = (
-            stateful_basis_stream(src, n_buckets=n_buckets)
+            stateful(src)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
@@ -686,8 +717,9 @@ def test_bucketed_basis_matches_per_vehicle_keying(spark, tmp_path):
         q.awaitTermination()
         return {tuple(r) for r in spark.read.parquet(out_dir).collect()}
 
-    bucketed = run(8, "bucketed")  # small bucket count → real packing
-    persig = run(None, "pervehicle")
+    # small bucket count → real packing
+    bucketed = run(lambda u: stateful_basis_stream(u, n_buckets=8), "bucketed")
+    persig = run(per_vehicle, "pervehicle")
     assert bucketed == persig
     # every vehicle emitted its first basis; the 5 advancing vehicles
     # emitted a second row; the stale vehicle (t3) did not
@@ -716,4 +748,3 @@ def test_state_buckets_sqrt_rule_and_auto_resolution():
     assert _resolve_buckets("auto", None) == 1024
     assert _resolve_buckets("auto", 4_000_000) == 2048
     assert _resolve_buckets(512, 4_000_000) == 512   # explicit pin wins
-    assert _resolve_buckets(None, 4_000_000) is None  # per-key A/B leg

@@ -140,23 +140,6 @@ def run_stream_dedup_evicting_heap(spark, sf_dir):
         os.environ.pop("SPARK_GRAFT_HEAP_STATE", None)
 
 
-def run_stream_near_dup_persig(spark, sf_dir):
-    """The pre-round-9 per-signature state keying (n_buckets=None),
-    kept as the A/B leg for the bucketed-state default."""
-    from dystonse_gtfs_data_spark.streaming import aggregations as agg
-
-    orig = agg.streaming_near_dup
-
-    def _persig(bands, ttl_ms=None, n_buckets=1024):
-        return orig(bands, ttl_ms, n_buckets=None)
-
-    agg.streaming_near_dup = _persig
-    try:
-        _noop(Q.REGISTRY["stream_near_dup"].fn(spark, sf_dir))
-    finally:
-        agg.streaming_near_dup = orig
-
-
 def run_semantic_windowed_sqrtn(spark, sf_dir):
     """Round-11 canonical: the neighbor-window pair valve at the same
     k=None √N setting as run_semantic_sqrtn — the A/B pair for the
@@ -188,7 +171,6 @@ SPECIALS = {
     "semantic_dedup_windowed_sqrtN": run_semantic_windowed_sqrtn,
     "winnow_fingerprints_rolling": run_winnow_rolling,
     "stream_near_dup_rocksdb": run_stream_near_dup_rocksdb,
-    "stream_near_dup_persig": run_stream_near_dup_persig,
     "stream_dedup_evicting": run_stream_dedup_evicting,
     "stream_dedup_evicting_heap": run_stream_dedup_evicting_heap,
 }

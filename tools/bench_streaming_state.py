@@ -1,19 +1,15 @@
-"""Streaming state-store rehearsal: default (HDFS-backed, executor-heap)
-vs RocksDB provider for the stateful streaming catalog entries, at a
+"""Streaming state-store A/B: the default (HDFS-backed, executor-heap)
+provider vs RocksDB for the stateful streaming catalog entries, at a
 scaled sf dir (default the sf1 replica tools/make_scaled_sf.py builds).
 
-The round-5 sf1 rehearsal measured stream_near_dup scaling 6.4× at 10×
-data on the DEFAULT store — state growth, not compute — and the RocksDB
-opt-in (streaming/pipeline.py rocksdb_state) existed but was never
-benched.  This harness runs each entry under both providers and prints
-one JSON line; the committed artifact is BENCH_sf1_state.json.
-
-Round 7 adds STATE-SIZE telemetry (verdict task #8): a
-StreamingQueryListener captures every progress event's stateOperators —
-numRowsTotal, memoryUsedBytes, and the provider's customMetrics (for
-RocksDB: rocksdbSstFileSize = on-disk bytes, rocksdbTotalMemoryUsage) —
-so the artifact states the RocksDB story in rows and bytes per batch,
-not just wall time.
+Each entry runs under both providers and the harness prints one JSON
+line.  A StreamingQueryListener captures every progress event's
+stateOperators — numRowsTotal, memoryUsedBytes, and the provider's
+customMetrics (for RocksDB: rocksdbSstFileSize = on-disk bytes,
+rocksdbTotalMemoryUsage) — so the artifact states each provider's
+state in rows and bytes per batch, not just wall time.  The RocksDB
+metrics appear only on the RocksDB leg, which shows each leg ran the
+store it names.
 
 Usage: python tools/bench_streaming_state.py [SF_DIR] [REPS]
 """
@@ -24,6 +20,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -32,7 +29,6 @@ from pyspark.sql.streaming import StreamingQueryListener
 from dystonse_gtfs_data_spark import queries as Q
 from dystonse_gtfs_data_spark.cache import release_persisted
 from dystonse_gtfs_data_spark.session import build_session
-from dystonse_gtfs_data_spark.streaming.pipeline import rocksdb_state
 
 ENTRIES = ("stream_near_dup", "stream_near_dup_ttl", "basis_stream")
 
@@ -91,6 +87,23 @@ class _StateMetricsListener(StreamingQueryListener):
         return list(self.batches[since:])
 
 
+@contextmanager
+def _state_provider(provider: str):
+    """Select a leg's state store.  Every entry runs under
+    ``catalog_stream_state``, which picks RocksDB unless
+    ``SPARK_GRAFT_HEAP_STATE=1``, so the variable (not a session conf)
+    chooses the provider; its previous value is restored afterwards."""
+    prev = os.environ.pop("SPARK_GRAFT_HEAP_STATE", None)
+    if provider == "default":
+        os.environ["SPARK_GRAFT_HEAP_STATE"] = "1"
+    try:
+        yield
+    finally:
+        os.environ.pop("SPARK_GRAFT_HEAP_STATE", None)
+        if prev is not None:
+            os.environ["SPARK_GRAFT_HEAP_STATE"] = prev
+
+
 def _summarize(batches: list[dict]) -> dict:
     """Maxima across a run's batches (state grows monotonically within
     a run for these entries, so the max is the end-of-run footprint)."""
@@ -132,12 +145,7 @@ def main() -> None:
             for _ in range(reps):
                 mark = len(listener.batches)
                 t0 = time.time()
-                if provider == "rocksdb":
-                    with rocksdb_state(spark):
-                        fn(spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                else:
+                with _state_provider(provider):
                     fn(spark, sf_dir).write.format("noop").mode(
                         "overwrite"
                     ).save()
@@ -154,38 +162,6 @@ def main() -> None:
                     flush=True,
                 )
             out[name][provider] = {"wall_s": walls, "state": states}
-    # round-10: bucket-WIDTH sweep (verdict task #4) — quantify the
-    # √keys rule's value-size trade by running the two near-dup entries
-    # at two explicit widths under the RocksDB provider (the bounded-
-    # memory production setting).  Fewer/fatter vs more/slimmer rows:
-    # the artifact records wall time AND state bytes per width.
-    widths: dict[str, dict[str, dict]] = {}
-    for n_buckets in (1024, 4096):
-        for name in ("stream_near_dup", "stream_near_dup_ttl"):
-            fn = getattr(Q, f"q_{name}")
-            walls, states = [], []
-            for _ in range(reps):
-                mark = len(listener.batches)
-                t0 = time.time()
-                with rocksdb_state(spark):
-                    fn(spark, sf_dir, n_buckets=n_buckets).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                walls.append(round(time.time() - t0, 3))
-                release_persisted()
-                batches = listener.drain(mark)
-                states.append({"summary": _summarize(batches)})
-                print(
-                    f"# width={n_buckets} {name} {walls[-1]}s "
-                    f"state={states[-1]['summary']}",
-                    file=sys.stderr,
-                    flush=True,
-                )
-            widths.setdefault(name, {})[str(n_buckets)] = {
-                "wall_s": walls,
-                "state": states,
-            }
-    out["bucket_width_sweep_rocksdb"] = widths
     print(
         json.dumps(
             {

@@ -138,8 +138,8 @@ def _bnlj_kinds(df) -> list[str]:
 def _dup_python_udfs(df) -> list[str]:
     """Duplicated Python-UDF evaluations: within one ArrowEvalPython
     node, two udf expressions with the SAME canonicalized form are the
-    projection-collapse duplication trap (round 7 measured
-    cap_curve_points running 3x/row after `withColumn(c, udf(x))` +
+    projection-collapse duplication trap (round 7 measured a curve-capping
+    UDF running 3x/row after `withColumn(c, udf(x))` +
     `select(f(c), g(c), c)` collapsed) — each duplicate is a full extra
     Python evaluation per row.  Returns one descriptor per duplicate."""
     root = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
