@@ -47,12 +47,6 @@ def _schedule_path(args) -> str:
     return candidates[-1]  # newest by name (date-stamped filenames)
 
 
-_RECORDS_KEY = [
-    "source", "route_id", "trip_id", "trip_start_date",
-    "trip_start_time", "stop_sequence",
-]
-
-
 def _merge_into_records(spark, records, records_path: str) -> None:
     """Latest-wins merge of ``records`` into the parquet table via a
     staging write + atomic rename (the MERGE the reference does row-wise
@@ -67,6 +61,7 @@ def _merge_into_records(spark, records, records_path: str) -> None:
     import shutil
 
     from .operators.records import merge_records
+    from .schemas import RECORDS_KEY
 
     target_file_bytes = 128 * 1024 * 1024
     old = records_path + ".old"
@@ -77,24 +72,26 @@ def _merge_into_records(spark, records, records_path: str) -> None:
     # silently rebuild the table from the new batch alone
     if not os.path.exists(records_path) and os.path.exists(old):
         os.rename(old, records_path)
-    if os.path.exists(records_path):
-        existing = spark.read.parquet(records_path)
-        merged = merge_records(existing, records, key=_RECORDS_KEY)
-        total = sum(
-            os.path.getsize(os.path.join(r, n))
-            for r, _d, names in os.walk(records_path)
-            for n in names
-            if n.endswith(".parquet")
-        )
-        n_files = max(1, math.ceil(total * 1.1 / target_file_bytes))
-    else:
-        merged = records
-        n_files = 1  # a first batch is far below the file-size target
+    # a first batch merges against an empty table, so latest-wins also
+    # holds within it (and its byte count of 0 gives one file)
+    existing = (
+        spark.read.parquet(records_path)
+        if os.path.exists(records_path)
+        else records.limit(0)
+    )
+    merged = merge_records(existing, records, key=RECORDS_KEY)
+    total = sum(
+        os.path.getsize(os.path.join(r, n))
+        for r, _d, names in os.walk(records_path)
+        for n in names
+        if n.endswith(".parquet")
+    )
+    n_files = max(1, math.ceil(total * 1.1 / target_file_bytes))
     tmp = records_path + ".staging"
     shutil.rmtree(tmp, ignore_errors=True)  # stale staging from a crash
     (
-        merged.repartitionByRange(n_files, *_RECORDS_KEY)
-        .sortWithinPartitions(*_RECORDS_KEY)
+        merged.repartitionByRange(n_files, *RECORDS_KEY)
+        .sortWithinPartitions(*RECORDS_KEY)
         .write.mode("overwrite")
         .parquet(tmp)
     )

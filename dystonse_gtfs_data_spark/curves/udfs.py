@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .core import Curve, transfer_probability as _transfer_probability
+from .core import Curve
 
 CURVE_POINT_TYPE = T.StructType(
     [
@@ -53,20 +53,3 @@ def _eval_series(curves: pd.Series, args: pd.Series, fn) -> pd.Series:
 def curve_x_at_y(curve: pd.Series, y: pd.Series) -> pd.Series:
     """Quantile: x at cumulative probability y (A13, C11)."""
     return _eval_series(curve, y, lambda c, a: float(c.x_at_y(float(a))))
-
-
-@F.pandas_udf(T.DoubleType())
-def curve_y_at_x(curve: pd.Series, x: pd.Series) -> pd.Series:
-    """CDF value at x (C11)."""
-    return _eval_series(curve, x, lambda c, a: float(c.y_at_x(float(a))))
-
-
-@F.pandas_udf(T.DoubleType())
-def curve_transfer_probability(arrival: pd.Series, departure: pd.Series) -> pd.Series:
-    """C14: probability that `departure` happens after `arrival`."""
-    out = np.full(len(arrival), np.nan)
-    for i, (a_rows, d_rows) in enumerate(zip(arrival, departure)):
-        a, d = rows_to_curve(a_rows), rows_to_curve(d_rows)
-        if a is not None and d is not None:
-            out[i] = _transfer_probability(a, d)
-    return pd.Series(out)

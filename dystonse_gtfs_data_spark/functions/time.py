@@ -33,7 +33,7 @@ TIME_SLOTS: list[tuple[int, int, int, int, int]] = [
     (10, 6, 3, 20, 4),  # night before workday (Sun–Thu 20:00 → 04:00)
     (11, 4, 5, 20, 4),  # night before weekend day (Fri–Sat 20:00 → 04:00)
 ]
-DEFAULT_TIME_SLOT_ID = 12
+DEFAULT_SLOT = 12
 
 
 def _slot_predicate_sql(wd: str, hr: str, slot: tuple[int, int, int, int, int]) -> str:
@@ -68,7 +68,7 @@ def time_slot_id(ts: Column) -> Column:
         )
         cond = day & hour
         expr = F.when(cond, F.lit(sid)) if expr is None else expr.when(cond, F.lit(sid))
-    return expr.otherwise(F.lit(DEFAULT_TIME_SLOT_ID))
+    return expr.otherwise(F.lit(DEFAULT_SLOT))
 
 
 def time_slot_id_sql(ts_col: str) -> str:
@@ -78,7 +78,7 @@ def time_slot_id_sql(ts_col: str) -> str:
     whens = "\n      ".join(
         f"WHEN {_slot_predicate_sql(wd, hr, s)} THEN {s[0]}" for s in TIME_SLOTS
     )
-    return f"(CASE\n      {whens}\n      ELSE {DEFAULT_TIME_SLOT_ID} END)"
+    return f"(CASE\n      {whens}\n      ELSE {DEFAULT_SLOT} END)"
 
 
 def service_day_timestamp(

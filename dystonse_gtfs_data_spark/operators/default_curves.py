@@ -27,8 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..curves.core import Curve, average_curves, make_curve, simplify
-from ..curves.udfs import curve_to_rows, rows_to_curve
+from ..curves.core import Curve, average_curves, simplify
+from ..curves.udfs import CURVE_DDL, curve_to_rows, rows_to_curve
 from ..functions.route import route_section
 from ..functions.time import TIME_SLOTS
 from ..schemas import (
@@ -38,11 +38,14 @@ from ..schemas import (
     PRECISION_GENERAL,
     PRECISION_SUPER_GENERAL,
 )
+from .curve_steps import delay_ecdfs, event_fanout, statistics_rows
 
 MIN_DATA_FOR_CURVE = 10  # src/analyser/default_curves.rs:21
 ROUTE_TYPES = [0, 1, 2, 3, 4, 5, 6, 7]  # GTFS codes present in FIXTURES.md
 SECTIONS = ["beginning", "middle", "end"]
 SLOT_IDS = [s[0] for s in TIME_SLOTS]  # the 11 non-DEFAULT slots
+_GRID_KEYS = ["route_type", "route_section", "time_slot_id", "event_type"]
+_MEMBER_SORT_COLS = [*_GRID_KEYS, "route_id", "route_variant"]
 
 
 def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
@@ -59,63 +62,12 @@ def variant_section_curves(enriched: DataFrame, routes: DataFrame) -> DataFrame:
         "route_section",
         "route_id",
         "route_variant",
-        F.inline(F.array(
-            F.struct(
-                F.col("slot_arrival").alias("time_slot_id"),
-                F.lit(EVENT_ARRIVAL).alias("event_type"),
-                F.col("delay_arrival").cast("double").alias("delay"),
-            ),
-            F.struct(
-                F.col("slot_departure").alias("time_slot_id"),
-                F.lit(EVENT_DEPARTURE).alias("event_type"),
-                F.col("delay_departure").cast("double").alias("delay"),
-            ),
-        )),
-    ).filter(F.col("delay").isNotNull())
-
-    def build(key: tuple, pdf: pd.DataFrame) -> dict | None:
-        values = pdf["delay"].to_numpy(dtype=float)
-        if len(values) < MIN_DATA_FOR_CURVE:
-            return None
-        made = make_curve(values, None)
-        if made is None:
-            return None
-        route_type, section, slot, event_type, route_id, route_variant = key
-        return {
-            "route_type": [int(route_type)],
-            "route_section": [section],
-            "time_slot_id": [int(slot)],
-            "event_type": [int(event_type)],
-            "route_id": [route_id],
-            "route_variant": [route_variant],
-            "curve": [curve_to_rows(simplify(made[0], 0.001))],
-            "sample_size": [len(values)],
-        }
-
-    schema = (
-        "route_type int, route_section string, time_slot_id int, event_type int, "
-        "route_id string, route_variant long, "
-        "curve array<struct<x: float, y: float>>, sample_size int"
-    )
-    # batched grouped-map dispatch (see stop_pair_curve_sets): one
-    # Python invocation per Arrow batch over the variant-keyed groups
-    # (the ×R-scaling group space); the per-group ECDF is
-    # order-insensitive (make_curve np.sorts internally)
-    from .grouped_map import map_grouped_in_pandas
-
-    return map_grouped_in_pandas(
-        stacked,
-        (
-            "route_type", "route_section", "time_slot_id", "event_type",
-            "route_id", "route_variant",
+        event_fanout(
+            time_slot_id=("slot_arrival", "slot_departure"),
+            delay=("delay_arrival", "delay_departure"),
         ),
-        build,
-        schema,
     )
-
-
-_GRID_KEYS = ["route_type", "route_section", "time_slot_id", "event_type"]
-_MEMBER_SORT_COLS = [*_GRID_KEYS, "route_id", "route_variant"]
+    return delay_ecdfs(stacked, _MEMBER_SORT_COLS, MIN_DATA_FOR_CURVE, 0.001)
 
 
 def _average(
@@ -184,21 +136,6 @@ def default_statistics(enriched: DataFrame, routes: DataFrame) -> DataFrame:
     filled = variant_section_curves(enriched, routes).groupBy().applyInPandas(
         _rollup,
         "route_type int, route_section string, time_slot_id int, event_type int, "
-        "curve array<struct<x: float, y: float>>, precision_type int, sample_size int",
+        f"curve {CURVE_DDL}, precision_type int, sample_size int",
     )
-    return filled.select(
-        F.lit("default").alias("scope"),
-        F.lit(None).cast("string").alias("route_id"),
-        F.lit(None).cast("long").alias("route_variant"),
-        F.lit(None).cast("int").alias("start_stop_index"),
-        F.lit(None).cast("int").alias("end_stop_index"),
-        F.lit(None).cast("int").alias("stop_index"),
-        "route_type",
-        "route_section",
-        "time_slot_id",
-        "event_type",
-        F.lit(None).cast("float").alias("focus_delay"),
-        "curve",
-        "precision_type",
-        "sample_size",
-    )
+    return statistics_rows(filled, scope="default")

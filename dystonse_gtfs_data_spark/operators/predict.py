@@ -27,13 +27,15 @@ from pyspark.sql import types as T
 
 from ..curves.core import Curve, curve_set_interpolate, simplify, simplify_to_max_points
 from ..curves.udfs import CURVE_TYPE, curve_to_rows, rows_to_curve
+from ..functions.route import route_section
+from ..functions.time import DEFAULT_SLOT, service_day_timestamp, time_slot_id
 from ..schemas import (
     PRECISION_FALLBACK_SPECIFIC,
     PRECISION_SEMI_SPECIFIC,
     PRECISION_SPECIFIC,
 )
-
-DEFAULT_SLOT = 12
+from ..sources.tables import maybe_broadcast
+from .curve_steps import event_fanout
 
 _CURVE_SET_TYPE = T.ArrayType(
     T.StructType(
@@ -103,8 +105,6 @@ def predict(
     pass ``wide=False``: a handful of request rows gains nothing from a
     full shuffle + defaultParallelism task launches of fixed latency.
     """
-    from ..sources.tables import maybe_broadcast
-
     # The ladder joins below are broadcasts, so the expensive Python
     # stage (the interpolate UDFs here, the caller's cap/bounds
     # mapInPandas) inherits the REQUESTS exchange's partitioning — and
@@ -276,12 +276,6 @@ def build_prediction_requests(
     (src/importer/per_schedule_importer.rs:315-366): each target stop
     gets route_section, time slot (from its scheduled event time) and
     the scheduled absolute event timestamp."""
-    from ..functions.route import route_section
-    from ..functions.time import service_day_timestamp, time_slot_id
-    from ..schemas import EVENT_ARRIVAL, EVENT_DEPARTURE
-
-    from ..sources.tables import maybe_broadcast
-
     # stop_times-sized frames: size-guard the hints (schedule tables for a
     # country feed are far beyond broadcast range)
     basis_idx = bases.join(
@@ -298,8 +292,8 @@ def build_prediction_requests(
         maybe_broadcast(
             stop_times_idx.select(
                 "trip_id",
-                F.col("stop_sequence").alias("target_stop_sequence"),
-                F.col("stop_id").alias("target_stop_id"),
+                "stop_sequence",
+                "stop_id",
                 F.col("stop_index").alias("end_stop_index"),
                 "stop_count",
                 "arrival_time",
@@ -310,18 +304,17 @@ def build_prediction_requests(
     ).filter(F.col("end_stop_index") > F.col("start_stop_index"))
 
     rt = F.broadcast(routes.select("route_id", "route_type"))
-    targets = targets.join(rt, "route_id")
+    return request_rows(targets.join(rt, "route_id"))
 
-    # one generator fans each target stop out to its arrival and
-    # departure requests
+
+def request_rows(targets: DataFrame) -> DataFrame:
+    """Target stops → :func:`predict` requests, one per arrival and one
+    per departure event, each with its scheduled absolute event time,
+    the time slot of that time and the target stop's route section.
+    ``targets`` carries the request columns selected below, plus
+    ``stop_count``, ``arrival_time`` and ``departure_time``."""
     events = targets.select(
-        "*",
-        F.inline(F.array(
-            F.struct(F.lit(EVENT_ARRIVAL).alias("event_type"),
-                     F.col("arrival_time").alias("event_time")),
-            F.struct(F.lit(EVENT_DEPARTURE).alias("event_type"),
-                     F.col("departure_time").alias("event_time")),
-        )),
+        "*", event_fanout(event_time=("arrival_time", "departure_time"))
     )
     event_dt = service_day_timestamp(F.col("trip_start_date"), F.col("event_time"))
     return events.select(
@@ -334,8 +327,8 @@ def build_prediction_requests(
         "trip_start_time",
         "start_stop_index",
         "end_stop_index",
-        F.col("target_stop_sequence").alias("stop_sequence"),
-        F.col("target_stop_id").alias("stop_id"),
+        "stop_sequence",
+        "stop_id",
         "initial_delay",
         "schedule_file_name",
         "event_type",

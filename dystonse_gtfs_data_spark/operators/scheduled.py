@@ -18,11 +18,10 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.route import route_section
-from ..functions.time import service_day_timestamp, time_slot_id
-from ..schemas import EVENT_ARRIVAL, EVENT_DEPARTURE, ORIGIN_SCHEDULE
+from ..functions.time import service_day_timestamp
+from ..schemas import ORIGIN_SCHEDULE
 from ..sources.tables import maybe_broadcast
-from .predict import finish_predictions, predict
+from .predict import finish_predictions, predict, request_rows
 from .specific_curves import stop_indexed
 
 _WEEKDAY_COLS = ["monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday"]
@@ -108,47 +107,21 @@ def generate_scheduled_predictions(
     targets = instances.join(
         maybe_broadcast(
             sti.select(
-                "trip_id", "stop_sequence", "stop_id", "stop_index", "stop_count",
+                "trip_id", "stop_sequence", "stop_id",
+                F.col("stop_index").alias("end_stop_index"), "stop_count",
                 "arrival_time", "departure_time",
             )
         ),
         "trip_id",
-    ).join(rt, "route_id")
-
-    # one generator fans each target stop out to its arrival and
-    # departure events, as build_prediction_requests does
-    events = targets.select(
+    ).join(rt, "route_id").select(
         "*",
-        F.inline(F.array(
-            F.struct(F.lit(EVENT_ARRIVAL).alias("event_type"),
-                     F.col("arrival_time").alias("event_time")),
-            F.struct(F.lit(EVENT_DEPARTURE).alias("event_type"),
-                     F.col("departure_time").alias("event_time")),
-        )),
-    ).withColumn(
-        "scheduled_time",
-        service_day_timestamp(F.col("trip_start_date"), F.col("event_time")),
+        F.lit(source).alias("source"),
+        F.lit(None).cast("int").alias("start_stop_index"),
+        F.lit(None).cast("double").alias("initial_delay"),
+        F.lit(schedule_file_name).cast("string").alias("schedule_file_name"),
     )
-    requests = events.filter(
+    requests = request_rows(targets).filter(
         (F.col("scheduled_time") >= F.lit(window_begin))
         & (F.col("scheduled_time") < F.lit(window_end))
-    ).select(
-        F.lit(source).alias("source"),
-        "route_id",
-        "route_variant",
-        "route_type",
-        "trip_id",
-        "trip_start_date",
-        "trip_start_time",
-        "stop_sequence",
-        "stop_id",
-        F.lit(None).cast("int").alias("start_stop_index"),
-        F.col("stop_index").alias("end_stop_index"),
-        F.lit(None).cast("double").alias("initial_delay"),
-        "event_type",
-        "scheduled_time",
-        time_slot_id(F.col("scheduled_time")).alias("time_slot_id"),
-        route_section(F.col("stop_index"), F.col("stop_count")).alias("route_section"),
-        F.lit(schedule_file_name).cast("string").alias("schedule_file_name"),
     )
     return finish_predictions(predict(statistics, requests), ORIGIN_SCHEDULE)

@@ -21,18 +21,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..curves.core import build_curve_set, make_curve, simplify
-from ..curves.udfs import curve_to_rows
+from ..curves.core import build_curve_set
+from ..curves.udfs import CURVE_DDL, curve_to_rows
 from ..functions.delays import CURVE_DELAY_BOUND, DELAY_ROUND_STEP
-from ..functions.time import service_day_timestamp, time_slot_id
+from ..functions.time import DEFAULT_SLOT, service_day_timestamp, time_slot_id
 from ..sources.tables import maybe_broadcast
 from ..schemas import (
-    DELAY_CURVES,
     EVENT_ARRIVAL,
     EVENT_DEPARTURE,
     PRECISION_SEMI_SPECIFIC,
     PRECISION_SPECIFIC,
 )
+from .curve_steps import delay_ecdfs, event_fanout, statistics_rows
+from .grouped_map import map_grouped_in_pandas
 
 MIN_PAIRS_FOR_CURVE_SET = 20  # strictly-greater guard (:337)
 MIN_DATA_FOR_GENERAL_CURVE = 20  # >= guard (:359-361)
@@ -137,31 +138,6 @@ def project_missing_delays(records: DataFrame, stop_times: DataFrame) -> DataFra
     )
 
 
-def _ecdf_udf(key: tuple, pdf: pd.DataFrame) -> dict | None:
-    """Grouped fn: raw delay values → one general_delay curve row."""
-    values = pdf["delay"].to_numpy(dtype=float)
-    if len(values) < MIN_DATA_FOR_GENERAL_CURVE:
-        return None
-    made = make_curve(values, None)
-    if made is None:
-        return None
-    route_id, route_variant, stop_index, event_type = key
-    return {
-        "route_id": [route_id],
-        "route_variant": [route_variant],
-        "stop_index": [int(stop_index)],
-        "event_type": [int(event_type)],
-        "curve": [curve_to_rows(simplify(made[0], 0.01))],
-        "sample_size": [len(values)],
-    }
-
-
-_GENERAL_SCHEMA = (
-    "route_id string, route_variant long, stop_index int, event_type int, "
-    "curve array<struct<x: float, y: float>>, sample_size int"
-)
-
-
 def general_delay_curves(enriched: DataFrame) -> DataFrame:
     """A8: per (variant, stop index, event type) ECDF of raw delays
     (>= 20 values, simplify(0.01), precision SemiSpecific).  The
@@ -173,23 +149,13 @@ def general_delay_curves(enriched: DataFrame) -> DataFrame:
         "route_id",
         "route_variant",
         "stop_index",
-        F.inline(F.array(
-            F.struct(F.lit(EVENT_ARRIVAL).alias("event_type"),
-                     F.col("delay_arrival").alias("delay")),
-            F.struct(F.lit(EVENT_DEPARTURE).alias("event_type"),
-                     F.col("delay_departure").alias("delay")),
-        )),
-    ).filter(F.col("delay").isNotNull())
-    # batched grouped-map dispatch (see stop_pair_curve_sets): the
-    # per-group math is a plain sorted ECDF, order-insensitive
-    # (make_curve np.sorts internally), so no order_cols needed
-    from .grouped_map import map_grouped_in_pandas
-
-    return map_grouped_in_pandas(
+        event_fanout(delay=("delay_arrival", "delay_departure")),
+    )
+    return delay_ecdfs(
         stacked,
         ("route_id", "route_variant", "stop_index", "event_type"),
-        _ecdf_udf,
-        _GENERAL_SCHEMA,
+        MIN_DATA_FOR_GENERAL_CURVE,
+        0.01,
     )
 
 
@@ -223,11 +189,9 @@ def _curve_set_udf(key: tuple, pdf: pd.DataFrame) -> dict | None:
 
 _CURVE_SET_SCHEMA = (
     "route_id string, route_variant long, start_stop_index int, end_stop_index int, "
-    "time_slot_id int, event_type int, focus_delay float, "
-    "curve array<struct<x: float, y: float>>, sample_size int"
+    f"time_slot_id int, event_type int, focus_delay float, curve {CURVE_DDL}, "
+    "sample_size int"
 )
-
-DEFAULT_SLOT = 12
 
 
 def stop_pair_curve_sets(enriched: DataFrame) -> DataFrame:
@@ -325,8 +289,6 @@ def stop_pair_curve_sets(enriched: DataFrame) -> DataFrame:
         "route_id", "route_variant", "start_stop_index", "end_stop_index",
         "time_slot_id", "event_type",
     ]
-    from .grouped_map import map_grouped_in_pandas
-
     # explicit hash repartition on the group keys at defaultParallelism,
     # as predict sizes its curve tail: every group in one partition, and
     # exempt from AQE byte-coalescing.  (d_start, d_end) in the partition
@@ -349,36 +311,14 @@ def specific_statistics(records: DataFrame, stop_times: DataFrame) -> DataFrame:
     projected = project_missing_delays(records, stop_times)
     enriched = enrich_records(projected, sti)
 
-    sets = stop_pair_curve_sets(enriched).select(
-        F.lit("specific").alias("scope"),
-        "route_id",
-        "route_variant",
-        "start_stop_index",
-        "end_stop_index",
-        F.lit(None).cast("int").alias("stop_index"),
-        F.lit(None).cast("int").alias("route_type"),
-        F.lit(None).cast("string").alias("route_section"),
-        "time_slot_id",
-        "event_type",
-        "focus_delay",
-        "curve",
-        F.lit(PRECISION_SPECIFIC).alias("precision_type"),
-        "sample_size",
+    sets = statistics_rows(
+        stop_pair_curve_sets(enriched),
+        scope="specific",
+        precision_type=PRECISION_SPECIFIC,
     )
-    general = general_delay_curves(enriched).select(
-        F.lit("semi_specific").alias("scope"),
-        "route_id",
-        "route_variant",
-        F.lit(None).cast("int").alias("start_stop_index"),
-        F.lit(None).cast("int").alias("end_stop_index"),
-        "stop_index",
-        F.lit(None).cast("int").alias("route_type"),
-        F.lit(None).cast("string").alias("route_section"),
-        F.lit(None).cast("int").alias("time_slot_id"),
-        "event_type",
-        F.lit(None).cast("float").alias("focus_delay"),
-        "curve",
-        F.lit(PRECISION_SEMI_SPECIFIC).alias("precision_type"),
-        "sample_size",
+    general = statistics_rows(
+        general_delay_curves(enriched),
+        scope="semi_specific",
+        precision_type=PRECISION_SEMI_SPECIFIC,
     )
     return sets.unionByName(general)

@@ -76,6 +76,21 @@ def demo_statistics(spark: SparkSession) -> DataFrame:
     return tracked_persist(stats)
 
 
+def demo_predictions(spark: SparkSession) -> DataFrame:
+    """The demo feed's realtime predictions against
+    :func:`demo_statistics`."""
+    from .operators.predict import generate_realtime_predictions
+    from .operators.specific_curves import stop_indexed
+    from .sources.demo import build_records as demo_records
+    from .sources.demo import build_schedule
+
+    sched = build_schedule(spark)
+    return generate_realtime_predictions(
+        demo_records(spark), stop_indexed(sched["stop_times"]), sched["routes"],
+        sched["trips"], demo_statistics(spark),
+    )
+
+
 def register(name: str, oracle: str | None, covers: str = ""):
     def deco(fn):
         REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, covers=covers)
@@ -3477,7 +3492,7 @@ def q_simplify_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
     "differential-only to independent-oracle coverage",
 )
 def q_transfer_probability_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .curves.udfs import curve_transfer_probability
+    from .operators.journey import transfer_probability_udf
 
     ev = load_table(spark, sf_dir, "events")
     ev.createOrReplaceTempView("__tpm_events")
@@ -3502,7 +3517,7 @@ def q_transfer_probability_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
             "arrival_type",
             "departure_type",
             F.round(
-                curve_transfer_probability(F.col("arr"), F.col("dep")), 9
+                transfer_probability_udf(F.col("arr"), F.col("dep")), 9
             ).alias("p_transfer"),
         )
     )
@@ -4163,18 +4178,7 @@ def q_gtfs_statistics_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     "src/importer/per_schedule_importer.rs:315-366)",
 )
 def q_gtfs_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.predict import generate_realtime_predictions
-    from .operators.specific_curves import stop_indexed
-    from .sources.demo import build_records as demo_records
-    from .sources.demo import build_schedule
-
-    sched = build_schedule(spark)
-    records = demo_records(spark)
-    sti = stop_indexed(sched["stop_times"])
-    preds = generate_realtime_predictions(
-        records, sti, sched["routes"], sched["trips"], demo_statistics(spark)
-    )
-    return preds.select(
+    return demo_predictions(spark).select(
         "source",
         F.col("event_type").cast("int").alias("event_type"),
         "stop_id",
@@ -4623,6 +4627,17 @@ def q_trip_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("trip_id", "stop_sequence")
 
 
+# the demo board page: every demo stop over the demo feed's week
+_DEMO_BOARD_STOPS = [f"s{i}" for i in range(16)]
+_DEMO_BOARD_WINDOW = ("2024-01-01T08:00:00", "2024-01-06T10:00:00")
+
+
+def _max_stop_sequences(stop_times: DataFrame) -> DataFrame:
+    return stop_times.groupBy("trip_id").agg(
+        F.max("stop_sequence").alias("max_stop_sequence")
+    )
+
+
 @register(
     "departure_board",
     # differential oracle: single-node pandas board reimplementation
@@ -4637,26 +4652,14 @@ def q_departure_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as dt
 
     from .operators.monitor import departure_board
-    from .operators.predict import generate_realtime_predictions
-    from .operators.specific_curves import stop_indexed
-    from .sources.demo import build_records as demo_records
     from .sources.demo import build_schedule
 
-    sched = build_schedule(spark)
-    records = demo_records(spark)
-    sti = stop_indexed(sched["stop_times"])
-    preds = generate_realtime_predictions(
-        records, sti, sched["routes"], sched["trips"], demo_statistics(spark)
-    )
-    max_seq = sched["stop_times"].groupBy("trip_id").agg(
-        F.max("stop_sequence").alias("max_stop_sequence")
-    )
     board = departure_board(
-        preds,
-        stop_ids=[f"s{i}" for i in range(16)],
-        window_min=dt.datetime(2024, 1, 1, 8, 0),
-        window_max=dt.datetime(2024, 1, 6, 10, 0),
-        trip_max_sequences=max_seq,
+        demo_predictions(spark),
+        stop_ids=_DEMO_BOARD_STOPS,
+        window_min=dt.datetime.fromisoformat(_DEMO_BOARD_WINDOW[0]),
+        window_max=dt.datetime.fromisoformat(_DEMO_BOARD_WINDOW[1]),
+        trip_max_sequences=_max_stop_sequences(build_schedule(spark)["stop_times"]),
     )
     return board.select(
         "stop_id",
@@ -4678,6 +4681,44 @@ _MONITOR_HTTP_SCHEMA = (
 )
 
 
+def _demo_board_over_http(spark: SparkSession, gets: int, **server_kw) -> DataFrame:
+    """The demo departure board served by a live monitor server over
+    :func:`demo_predictions`: GET the board page ``gets`` times and
+    re-frame the last JSON payload.  ``server_kw`` goes to
+    ``start_monitor_server``."""
+    import json
+    import urllib.parse
+    import urllib.request
+
+    from .monitor_http import start_monitor_server
+    from .sources.demo import build_schedule
+
+    sched = build_schedule(spark)
+    server, port = start_monitor_server(
+        spark, demo_predictions(spark), stops=sched["stops"],
+        trip_max_sequences=_max_stop_sequences(sched["stop_times"]), **server_kw,
+    )
+    qs = urllib.parse.urlencode({
+        "stop_ids": ",".join(_DEMO_BOARD_STOPS),
+        "start": _DEMO_BOARD_WINDOW[0],
+        "end": _DEMO_BOARD_WINDOW[1],
+    })
+    try:
+        for _ in range(gets):
+            with urllib.request.urlopen(
+                f"http://127.0.0.1:{port}/departures?{qs}", timeout=600
+            ) as resp:
+                rows = json.load(resp)
+    finally:
+        server.shutdown()
+    return (
+        spark.createDataFrame(rows, schema=_MONITOR_HTTP_SCHEMA)
+        .orderBy("median_time_us", "trip_id", "stop_sequence", "event_type",
+                 "trip_start_date", "trip_start_time", "stop_id",
+                 "origin_type", "precision_type")
+    )
+
+
 @register(
     "monitor_http",
     # same differential oracle as departure_board: the HTTP shell must
@@ -4693,48 +4734,7 @@ _MONITOR_HTTP_SCHEMA = (
     "rows to the direct operator path (monitor_http.py)",
 )
 def q_monitor_http(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import urllib.parse
-    import urllib.request
-
-    from .monitor_http import start_monitor_server
-    from .operators.predict import generate_realtime_predictions
-    from .operators.specific_curves import stop_indexed
-    from .sources.demo import build_records as demo_records
-    from .sources.demo import build_schedule
-
-    sched = build_schedule(spark)
-    sti = stop_indexed(sched["stop_times"])
-    preds = generate_realtime_predictions(
-        demo_records(spark), sti, sched["routes"], sched["trips"],
-        demo_statistics(spark),
-    )
-    max_seq = sched["stop_times"].groupBy("trip_id").agg(
-        F.max("stop_sequence").alias("max_stop_sequence")
-    )
-    server, port = start_monitor_server(
-        spark, preds, stops=sched["stops"], trip_max_sequences=max_seq
-    )
-    try:
-        qs = urllib.parse.urlencode(
-            {
-                "stop_ids": ",".join(f"s{i}" for i in range(16)),
-                "start": "2024-01-01T08:00:00",
-                "end": "2024-01-06T10:00:00",
-            }
-        )
-        with urllib.request.urlopen(
-            f"http://127.0.0.1:{port}/departures?{qs}", timeout=600
-        ) as resp:
-            rows = json.load(resp)
-    finally:
-        server.shutdown()
-    return (
-        spark.createDataFrame(rows, schema=_MONITOR_HTTP_SCHEMA)
-        .orderBy("median_time_us", "trip_id", "stop_sequence", "event_type",
-                 "trip_start_date", "trip_start_time", "stop_id",
-                 "origin_type", "precision_type")
-    )
+    return _demo_board_over_http(spark, gets=1)
 
 
 @register(
@@ -4752,50 +4752,9 @@ def q_monitor_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     "page twice and hash-checks the CACHED response",
 )
 def q_departure_board_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import urllib.parse
-    import urllib.request
-
-    from .monitor_http import start_monitor_server
-    from .operators.predict import generate_realtime_predictions
-    from .operators.specific_curves import stop_indexed
-    from .sources.demo import build_records as demo_records
-    from .sources.demo import build_schedule
-
-    sched = build_schedule(spark)
-    sti = stop_indexed(sched["stop_times"])
-    preds = generate_realtime_predictions(
-        demo_records(spark), sti, sched["routes"], sched["trips"],
-        demo_statistics(spark),
-    )
-    max_seq = sched["stop_times"].groupBy("trip_id").agg(
-        F.max("stop_sequence").alias("max_stop_sequence")
-    )
-    server, port = start_monitor_server(
-        spark, preds, stops=sched["stops"], trip_max_sequences=max_seq,
-        materialize_ttl=3600.0,
-    )
-    try:
-        qs = urllib.parse.urlencode(
-            {
-                "stop_ids": ",".join(f"s{i}" for i in range(16)),
-                "start": "2024-01-01T08:00:00",
-                "end": "2024-01-06T10:00:00",
-            }
-        )
-        url = f"http://127.0.0.1:{port}/departures?{qs}"
-        with urllib.request.urlopen(url, timeout=600) as resp:
-            json.load(resp)  # warm the cache (live Spark query)
-        with urllib.request.urlopen(url, timeout=600) as resp:
-            rows = json.load(resp)  # served from the materialized cache
-    finally:
-        server.shutdown()
-    return (
-        spark.createDataFrame(rows, schema=_MONITOR_HTTP_SCHEMA)
-        .orderBy("median_time_us", "trip_id", "stop_sequence", "event_type",
-                 "trip_start_date", "trip_start_time", "stop_id",
-                 "origin_type", "precision_type")
-    )
+    # the first GET warms the cache with a live Spark query; the second
+    # is served from the materialized cache
+    return _demo_board_over_http(spark, gets=2, materialize_ttl=3600.0)
 
 
 # ---------------------------------------------------------------------------

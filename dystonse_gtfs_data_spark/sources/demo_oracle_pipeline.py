@@ -34,7 +34,7 @@ from ..curves.core import (
     simplify,
     simplify_to_max_points,
 )
-from ..functions.time import DEFAULT_TIME_SLOT_ID, TIME_SLOTS
+from ..functions.time import DEFAULT_SLOT, TIME_SLOTS
 from ..schemas import (
     EVENT_ARRIVAL,
     EVENT_DEPARTURE,
@@ -53,7 +53,6 @@ MIN_DATA_FOR_GENERAL_CURVE = 20
 MIN_DATA_FOR_DEFAULT_CURVE = 10
 DELAY_ROUND_STEP = 12
 CURVE_DELAY_BOUND = 3000
-DEFAULT_SLOT = 12
 ROUTE_TYPES = [0, 1, 2, 3, 4, 5, 6, 7]
 SECTIONS = ["beginning", "middle", "end"]
 SLOT_IDS = [s[0] for s in TIME_SLOTS]
@@ -96,7 +95,7 @@ def _slot_id(ts: dt.datetime) -> int:
         hour = (min_hr <= hr < max_hr) if min_hr <= max_hr else (hr >= min_hr or hr < max_hr)
         if day and hour:
             return sid
-    return DEFAULT_TIME_SLOT_ID
+    return DEFAULT_SLOT
 
 
 def _route_section(stop_index: int, stop_count: int) -> str:

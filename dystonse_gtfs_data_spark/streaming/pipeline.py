@@ -115,13 +115,13 @@ def catalog_stream_state(spark: SparkSession, n: int = 8):
     ``stream_state_partitions(n)`` + the RocksDB provider BY DEFAULT.
 
     RocksDB is the only viable store at corpus scale (state on local
-    disk + block cache vs. full maps in executor heap) and measured
-    equal-or-better at sf1 (BENCH_sf1_state.json: both providers
-    191,265 state rows, RocksDB 21-35 MB on disk vs 46-68 MB heap,
-    equal wall) — so the demo entries run what production runs.  Set
-    ``SPARK_GRAFT_HEAP_STATE=1`` to fall back to the default
-    HDFSBackedStateStoreProvider (the knob, e.g. for an environment
-    without local-disk scratch).  Every catalog entry uses a fresh
+    disk + block cache vs. full maps in executor heap), so the demo
+    entries run what production runs.  How it compares with the heap
+    store is unmeasured: every leg of BENCH_sf1_state.json, its
+    "default" leg included, ran RocksDB (the harness entered this
+    context for each leg).  Set ``SPARK_GRAFT_HEAP_STATE=1`` to fall
+    back to the default HDFSBackedStateStoreProvider (the knob, e.g.
+    for an environment without local-disk scratch).  Every catalog entry uses a fresh
     checkpoint per invocation, so flipping providers between rounds
     never violates a checkpoint's provider contract.
     """

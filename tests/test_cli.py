@@ -211,28 +211,36 @@ def test_full_cli_lifecycle(spark, data_dir, capsys):
         os.environ.pop(monkey_env, None)
 
 
+def _records_batch(spark, rows):
+    """Records rows keyed (trip_id, route_variant, stop_sequence),
+    recorded ``t`` seconds past 08:00 with delay_departure
+    = stop_sequence."""
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [
+            ("src", "r1", variant, trip, dt.date(2024, 1, 1), 100, seq,
+             dt.datetime(2024, 1, 1, 8, 0, t), float(seq))
+            for trip, variant, seq, t in rows
+        ],
+        "source string, route_id string, route_variant long, trip_id string, "
+        "trip_start_date date, trip_start_time int, stop_sequence int, "
+        "time_of_recording timestamp, delay_departure double",
+    )
+
+
 def test_merge_into_records_recovers_from_rename_crash(spark, tmp_path):
     # crash window: after rename(records -> .old), before
     # rename(.staging -> records).  The sole copy of the table lives in
     # '.old'; the next import must restore it and merge ON TOP of it —
     # not rebuild the table from the new batch alone (and never rmtree
     # the sole copy).
-    import datetime as dt
     import os
 
     from dystonse_gtfs_data_spark.__main__ import _merge_into_records
 
     def batch(ids, t):
-        return spark.createDataFrame(
-            [
-                ("src", "r1", f"t{i}", dt.date(2024, 1, 1), 100, i,
-                 dt.datetime(2024, 1, 1, 8, 0, t), float(i))
-                for i in ids
-            ],
-            "source string, route_id string, trip_id string, "
-            "trip_start_date date, trip_start_time int, stop_sequence int, "
-            "time_of_recording timestamp, delay_departure double",
-        )
+        return _records_batch(spark, [(f"t{i}", 0, i, t) for i in ids])
 
     path = str(tmp_path / "records")
     _merge_into_records(spark, batch([1, 2, 3], t=0), path)
@@ -241,3 +249,45 @@ def test_merge_into_records_recovers_from_rename_crash(spark, tmp_path):
     got = sorted(r["trip_id"] for r in spark.read.parquet(path).collect())
     assert got == ["t1", "t2", "t3", "t4"]  # history survived the crash
     assert not os.path.exists(path + ".old")
+
+
+def test_merge_into_records_keys_on_route_variant(spark, tmp_path):
+    # the merge key is the 7-column records key: two rows that differ
+    # only in route_variant are two records, on the first write and on
+    # a merge into an existing table
+    from dystonse_gtfs_data_spark.__main__ import _merge_into_records
+
+    path = str(tmp_path / "records")
+    _merge_into_records(spark, _records_batch(spark, [("t1", 0, 1, 0), ("t1", 1, 1, 0)]), path)
+    assert spark.read.parquet(path).count() == 2
+    _merge_into_records(spark, _records_batch(spark, [("t1", 1, 1, 1)]), path)
+    got = sorted(
+        (r["route_variant"], r["time_of_recording"].second)
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == [(0, 0), (1, 1)]
+
+
+def test_import_keeps_newest_of_re_reported_stop(spark, tmp_path, capsys):
+    # two feed files re-report stop 1 of one trip: a batch import into
+    # an empty --dir keeps one row for it, the newer report — the same
+    # latest-wins the merge applies against an existing table
+    d = tmp_path / "data"
+    sched = d / "schedules" / "2024-01-01-feed"
+    sched.mkdir(parents=True)
+    for name, content in GTFS_CSV.items():
+        (sched / f"{name}.txt").write_text(content)
+    rt = d / "rt"
+    rt.mkdir()
+    for n, (ts, delay) in enumerate([(1704096000, 60), (1704096060, 120)]):
+        row = {
+            "trip_id": "ta", "start_date": "20240101", "start_time": "08:00:00",
+            "route_id": "r1", "stop_id": "s0", "stop_sequence": 1,
+            "arrival_delay": delay, "departure_delay": delay,
+        }
+        (rt / f"feed{n}.pb").write_bytes(encode_feed_message([row], header_timestamp=ts))
+
+    out = _run(capsys, "--dir", str(d), "--source", "test", "import")
+    assert out[0]["records"] == 1
+    rows = spark.read.parquet(str(d / "db" / "records")).collect()
+    assert [(r["stop_sequence"], r["delay_arrival"]) for r in rows] == [(1, 120)]

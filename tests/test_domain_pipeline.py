@@ -455,6 +455,15 @@ class TestWideFixture:
         assert {r["n"] for r in per_variant} == {36}
 
 
+def test_statistics_rows_have_delay_curves_columns_and_types(statistics):
+    # names, order and SQL types; nullability is not compared, since the
+    # built curve column's elements are nullable and CURVE_TYPE's are not
+    def shape(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    assert shape(statistics.schema) == shape(S.DELAY_CURVES)
+
+
 def test_specific_statistics_construction_runs_no_job(spark, tmp_path):
     """Building the specific-statistics plan submits no Spark job: the
     curve-set repartition is sized without looking at the data.  The

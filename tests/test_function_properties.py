@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from dystonse_gtfs_data_spark import schemas as S
 from dystonse_gtfs_data_spark.functions.delays import round_toward_zero
-from dystonse_gtfs_data_spark.functions.time import DEFAULT_TIME_SLOT_ID, time_slot_id
+from dystonse_gtfs_data_spark.functions.time import DEFAULT_SLOT, time_slot_id
 from dystonse_gtfs_data_spark.operators.scheduled import prediction_high_watermark
 
 
@@ -27,7 +27,7 @@ def test_time_slots_partition_the_week(spark):
     out = df.select(time_slot_id(F.col("ts")).alias("slot")).collect()
     slots = [r["slot"] for r in out]
     assert all(1 <= s <= 11 for s in slots)
-    assert DEFAULT_TIME_SLOT_ID not in slots
+    assert DEFAULT_SLOT not in slots
     assert set(slots) == set(range(1, 12))  # all 11 slots reachable
 
 
